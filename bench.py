@@ -96,6 +96,13 @@ def main() -> None:
         tune_shuffle_partitions,
     )
 
+    # fail on a misspelled SPARK_GRAFT_BENCH_EXTRA name before paying for
+    # a Spark session, not with a KeyError after the warm-up starts
+    qs = entrymod.queries()
+    unknown = [q for q in HEADLINE if q not in qs]
+    if unknown:
+        sys.exit(f"bench.py: unknown query name(s): {', '.join(unknown)}")
+
     spark = get_spark(app_name="bench")
     # mute the expected WindowExec no-partition warning from the O(ticks)
     # v3 frames; data-sized frames are pinned window-partitioned by
@@ -115,7 +122,6 @@ def main() -> None:
         reset_intermediates,
     )
 
-    qs = entrymod.queries()
     sf = SF_DIR.rstrip("/").split("sf")[-1]
 
     # untimed warm-up pass: run every headline query once so JIT/codegen

@@ -280,6 +280,45 @@ def test_embedding_lsh_collapse_equivalence(spark, sf_dir):
     assert {(first["vec_id"], 90001), (first["vec_id"], 90002), (90001, 90002)} <= pair_ids
 
 
+def _pair_block_input(spark, sizes):
+    """One ``(d, __ids)`` row per size: ids 0..d-1 in scrambled order, so
+    the expander's own sort is exercised."""
+    rows = [(d, [(i * 7919) % d for i in range(d)] if d else []) for d in sizes]
+    return spark.createDataFrame(rows, "d int, __ids array<bigint>")
+
+
+def test_pair_blocks_emit_every_combination_across_block_edges(spark):
+    """The bounded pair expander emits exactly itertools.combinations of
+    each id array, for sizes on both sides of every block boundary."""
+    import itertools
+
+    from v3_polars_spark.datapipe.dedup import _PAIR_BLOCK as B, _pair_blocks
+
+    sizes = [1, 2, B - 1, B, B + 1, 2 * B + 3]
+    got = {d: [] for d in sizes}
+    out = _pair_blocks(_pair_block_input(spark, sizes), "d").select(
+        "d", F.inline("__p")
+    )
+    for r in out.toLocalIterator():
+        got[r["d"]].append((r["id_a"], r["id_b"]))
+    for d in sizes:
+        assert sorted(got[d]) == list(itertools.combinations(range(d), 2)), d
+
+
+def test_pair_blocks_bound_every_generated_array(spark):
+    """On a 3-block group no generated pair array exceeds B^2 elements,
+    while the arrays together still hold all d(d-1)/2 pairs."""
+    from v3_polars_spark.datapipe.dedup import _PAIR_BLOCK as B, _pair_blocks
+
+    d = 3 * B
+    sizes = _pair_blocks(_pair_block_input(spark, [d])).select(
+        F.size("__p").alias("n")
+    )
+    r = sizes.agg(F.max("n").alias("mx"), F.sum("n").alias("tot")).first()
+    assert r["mx"] <= B * B
+    assert r["tot"] == d * (d - 1) // 2
+
+
 def test_ivf_topk_recall(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 3).select(
@@ -305,13 +344,10 @@ def test_ivf_search_nonfinite_centroid_falls_back(spark):
     """A NaN centroid component (reachable: ivf_build means propagate a
     NaN embedding) must NOT be rendered into the inline literal plan —
     'nanD' is unparseable SQL. The search falls back to the general
-    crossJoin+window plan and still returns ranked finite matches."""
+    crossJoin+window plan and still returns ranked finite matches. A
+    NULL component takes the same fallback."""
     from v3_polars_spark.datapipe import ivf_search
 
-    centroids = spark.createDataFrame(
-        [(0, [1.0, 0.0]), (1, [float("nan"), 1.0])],
-        "cluster_id long, centroid array<double>",
-    )
     assigned = spark.createDataFrame(
         [(0, 10, [1.0, 0.1]), (0, 11, [0.9, 0.2]), (1, 20, [0.0, 1.0])],
         "cluster_id long, vec_id long, __v array<double>",
@@ -319,8 +355,14 @@ def test_ivf_search_nonfinite_centroid_falls_back(spark):
     q = spark.createDataFrame(
         [(1, [1.0, 0.0])], "query_id long, embedding array<double>"
     )
-    rows = ivf_search(centroids, assigned, q, k=2, n_probe=2).collect()
-    assert [r["vec_id"] for r in sorted(rows, key=lambda r: r["rank"])] == [10, 11]
+    for bad in (float("nan"), None):
+        centroids = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [bad, 1.0])],
+            "cluster_id long, centroid array<double>",
+        )
+        rows = ivf_search(centroids, assigned, q, k=2, n_probe=2).collect()
+        ranked = [r["vec_id"] for r in sorted(rows, key=lambda r: r["rank"])]
+        assert ranked == [10, 11], bad
 
 
 def test_ivf_search_null_vn_recomputes_norm(spark):

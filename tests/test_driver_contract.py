@@ -121,3 +121,24 @@ def test_cache_splits_handles_directory_parquet(tmp_path):
         sparkContext = _SC()
 
     assert em._cache_splits(_Spark(), str(tmp_path), "lineitem") == 8
+
+
+def test_bench_rejects_unknown_extra_query_before_spark(tmp_path):
+    """A misspelled SPARK_GRAFT_BENCH_EXTRA name exits non-zero with a
+    message naming it, before any Spark session or input is touched (the
+    sf dir here does not exist)."""
+    import subprocess
+    import sys
+
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_BENCH_EXTRA="dp_unigram,no_such_query",
+        SPARK_GRAFT_SF_DIR=str(tmp_path / "missing"),
+    )
+    out = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py")],
+        env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert out.returncode != 0
+    assert "no_such_query" in out.stderr
+    assert out.stdout == ""

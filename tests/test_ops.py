@@ -360,6 +360,28 @@ def test_asof_same_source_matches_generic(spark):
     assert [key(r) for r in a] == [key(r) for r in b]
 
 
+def test_asof_same_source_null_right_filter_sees_exact_match(spark):
+    """A left row whose right_filter evaluates NULL is not a right row: it
+    must still sort after the right rows at its own ``on`` and see the
+    exact-timestamp match (a NULL side marker sorted it first)."""
+    from v3_polars_spark.ops import asof_join_same_source
+
+    df = spark.createDataFrame(
+        [(0, 5, 0, None, None), (0, 5, 1, "R", 1.0), (0, 3, 2, "R", 0.5)],
+        "k int, t int, uid int, side string, v double",
+    )
+    out = asof_join_same_source(
+        df,
+        left_filter=F.col("side").isNull(),
+        right_filter=F.col("side") == "R",
+        on="t",
+        by=["k"],
+        values={"v": "rv"},
+        tiebreak=["uid"],
+    )
+    assert [(r["uid"], r["rv"]) for r in out.collect()] == [(0, 1.0)]
+
+
 def test_asof_same_source_zero_exchanges_off_keyed_cache(spark):
     """Off a by-clustered source, the same-source plan needs NO exchange
     (the point of the formulation — the union form re-shuffled the whole

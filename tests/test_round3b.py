@@ -397,6 +397,17 @@ def test_dq_checks_all_pass_and_null_key_semantics(spark):
     assert report == {"unique:id": True, "referential:fk": True}
 
 
+def test_dq_check_equality_is_identity_not_column(spark):
+    """Comparing two Check specs answers a plain bool: field-wise equality
+    would compare their aggregate Columns, which builds a Column instead."""
+    from v3_polars_spark.ops import check_not_null
+
+    t = spark.createDataFrame([(1, None)], "id int, status string")
+    a, b = check_not_null(t, "status"), check_not_null(t, "status")
+    assert (a == b) is False
+    assert (a == a) is True
+
+
 # ---------------------------------------------------------------------------
 # keep-best near-dedup and best-match fuzzy resolution
 # ---------------------------------------------------------------------------

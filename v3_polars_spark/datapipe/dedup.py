@@ -6,7 +6,7 @@ Scale design notes (the point of each implementation):
 - exact dedup: hash aggregate on the fingerprint — one shuffle, map-side
   combine; never a window over the full corpus.
 - MinHash+LSH: the candidate generation is shingle-explode → per-doc
-  signature (groupBy doc) → band buckets → self-join on bucket. All joins
+  signature (groupBy doc) → band buckets → in-bucket pairs. All shuffles
   key on short hashes; no O(n²) pair enumeration ever materializes. The
   signature permutations use double hashing (h_i = h1 + i*h2 over 56-bit
   md5-prefix ints — Kirsch-Mitzenmacher), engine-portable pure SQL, so
@@ -17,6 +17,16 @@ Scale design notes (the point of each implementation):
 - n-gram Jaccard: exact verify step for candidate pairs (used after LSH,
   or standalone at small scale).
 - embedding cosine: see similarity.py; near-dup = cos >= threshold.
+
+The four pair operators (minhash, n-gram, hamming, embedding-LSH) share
+one exact-collapse primitive and one pair expander. ``_collapse_exact``
+groups identical inputs into one persisted ``(__rep, __ids, payload)``
+row per distinct key, the operator runs on the representatives, and
+``_expand_collapsed_pairs`` restores every member pair. All in-task pair
+generation — within-group pairs and LSH bucket candidates alike — goes
+through ``_pair_blocks``, which emits a d-id group as id-block pairs so
+no generated array exceeds ``_PAIR_BLOCK``² pairs however skewed the
+groups or buckets are.
 """
 
 from __future__ import annotations
@@ -218,22 +228,7 @@ def ngram_jaccard_pairs(
         per_doc = sh.groupBy(id_col).agg(
             F.md5(F.to_json(F.sort_array(F.collect_set("shingle")))).alias("__gk")
         )
-        # one groupBy aggregation derives the whole collapse state (rep +
-        # member array) — same formulation as _minhash_collapse_graph:
-        # map-side partials on 16-byte keys, no window sort, and the one
-        # persisted frame holds one row per DISTINCT set (coalesced like
-        # every post-collapse cache). The exploded shingle stream still
-        # needs the semi-join filter to build the representative shingle
-        # rows.
-        groups = _track(
-            per_doc.groupBy("__gk")
-            .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-            )
-            .coalesce(_collapse_parts(per_doc))
-        )
-        members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
+        groups = _collapse_exact(per_doc, id_col, "__gk")
         # reps persisted: _ngram_jaccard_core consumes it three times
         # (sizes + both join sides), and each consumer would otherwise
         # re-run the semi-join over the full exploded-shingle cache
@@ -246,7 +241,7 @@ def ngram_jaccard_pairs(
         )
         rep_pairs = _ngram_jaccard_core(reps, id_col, threshold)
         return _expand_collapsed_pairs(
-            rep_pairs, members, id_col, threshold, within_groups=groups
+            rep_pairs, groups, "jaccard", F.when(F.lit(threshold) <= 1.0, 1.0)
         )
     return _ngram_jaccard_core(sh, id_col, threshold)
 
@@ -453,12 +448,12 @@ def minhash_lsh_pairs(
         return _lsh_pairs_from_sets(
             sets, id_col, num_hashes, bands, verify_threshold
         )
-    groups, members, rep_pairs = _minhash_collapse_graph(
+    groups, rep_pairs = _minhash_collapse_graph(
         shingle_hash_sets(df, text_col, id_col, n),
         id_col, num_hashes, bands, verify_threshold,
     )
     return _expand_collapsed_pairs(
-        rep_pairs, members, id_col, verify_threshold, within_groups=groups
+        rep_pairs, groups, "jaccard", F.when(F.lit(verify_threshold) <= 1.0, 1.0)
     )
 
 
@@ -493,41 +488,54 @@ def _collapse_parts(df: DataFrame) -> int:
     return max(floor, parent // 10)
 
 
+def _collapse_exact(
+    frame: DataFrame, id_col: str, key: str | Column, payload: tuple[str, ...] = ()
+) -> DataFrame:
+    """The exact-collapse state every pair operator shares: one tracked,
+    coalesced row per distinct ``key`` (a column name or expression) —
+    ``(key, __rep, __ids, *payload)``, with ``__rep`` the min id and
+    ``__ids`` the member-id list.
+
+    ONE groupBy aggregation, so the exchange carries map-side PARTIAL
+    aggregates: on a duplication-heavy corpus co-partitioned duplicates
+    collapse before the shuffle, and the payload bytes cross once per
+    (group x input partition) instead of once per row (guide §2.3); no
+    window sort. ``first(payload)`` is a valid representative because
+    the key is a rendering of the payload, so every row in a group
+    carries the same value and which member's copy survives is
+    unobservable downstream. Under AQE every persisted-frame reference
+    spawns its own TableCacheQueryStage job (~30-50 ms scheduling floor
+    each, measured), so this is the ONLY persisted frame of a collapse:
+    members and representatives are narrow derivations of it."""
+    return _track(
+        frame.groupBy(key)
+        .agg(
+            F.min(id_col).alias("__rep"),
+            F.collect_list(F.col(id_col)).alias("__ids"),
+            *[F.first(c).alias(c) for c in payload],
+        )
+        .coalesce(_collapse_parts(frame))
+    )
+
+
 def _minhash_collapse_graph(
     sets: DataFrame,
     id_col: str,
     num_hashes: int,
     bands: int,
     verify_threshold: float,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(groups, members, rep_pairs) over a ``(id_col, shset)`` frame.
+) -> tuple[DataFrame, DataFrame]:
+    """(groups, rep_pairs) over a ``(id_col, shset)`` frame.
 
-    exact-collapse: one row per distinct shingle set. Group key = md5 of
-    the SORTED set rendered to string (16-byte shuffle keys instead of
-    shuffling the arrays themselves); sort_array makes set-equality, not
-    array-order, the grouping relation. Docs with empty sets produce no
-    signature in the uncollapsed pipeline, hence no pairs — exclude them
-    from groups so within-group expansion cannot invent pairs for them.
-
-    ONE groupBy aggregation derives the whole collapse state — one row
-    per distinct set: ``(rep_id, __ids member list, shset)`` — and is the
-    ONLY persisted frame. ``min(id)`` is the representative, the
-    collect_list is the membership map, and ``first(shset)`` is a valid
-    representative array because every row in a group carries the SAME
-    set (the group key is the sorted rendering): signatures (explode +
-    min), verify (array_intersect / size) and jaccard are set-functions,
-    so WHICH member's array survives is unobservable in the results.
-    Versus the previous window formulation (window over __gk + three
-    persisted frames: the array-bearing window output plus narrow
-    members/reps derivations) this removes two persisted frames and the
-    window sort while keeping the same single exchange — and the
-    exchange now carries map-side PARTIAL aggregates: on a
-    duplication-heavy corpus co-partitioned duplicates collapse before
-    the shuffle, so the array bytes cross once per (group x input
-    partition) instead of once per doc (guide §2.3). Under AQE every
-    persisted-frame reference spawns its own TableCacheQueryStage job
-    (~30-50 ms scheduling floor each, measured); dropping from three
-    tracked frames to one removes that per-consumer parade.
+    exact-collapse (:func:`_collapse_exact`): one row per distinct
+    shingle set. Group key = md5 of the SORTED set rendered to string
+    (16-byte shuffle keys instead of shuffling the arrays themselves);
+    sort_array makes set-equality, not array-order, the grouping
+    relation. Signatures (explode + min), verify (array_intersect /
+    size) and jaccard are set-functions, so the representative
+    ``first(shset)`` is exact. Docs with empty sets produce no signature
+    in the uncollapsed pipeline, hence no pairs — exclude them from
+    groups so within-group expansion cannot invent pairs for them.
 
     The empty-set exclusion happens AFTER the persisted aggregate
     (``size(shset)`` filter on the cached frame), never as a filter on
@@ -540,32 +548,17 @@ def _minhash_collapse_graph(
     persist that used to act as the pushdown barrier was removed).
     Filtering the cached frame costs one comparison per distinct row.
     Empty-set docs form their own group (gk = md5 of the empty-array
-    rendering) and are dropped from both ``members`` and ``reps``, so —
-    exactly as before — they contribute no pairs."""
-    keyed = sets.select(
-        F.col(id_col),
-        F.col("shset"),
-        F.md5(F.sort_array(F.col("shset")).cast("string")).alias("__gk"),
+    rendering) and are dropped from the returned groups, so they
+    contribute no pairs."""
+    gk = F.md5(F.sort_array(F.col("shset")).cast("string")).alias("__gk")
+    groups = _collapse_exact(sets, id_col, gk, ("shset",)).filter(
+        F.size("shset") > 0
     )
-    parts = _collapse_parts(sets)
-    groups = _track(
-        keyed.groupBy("__gk")
-        .agg(
-            F.min(id_col).alias("__rep"),
-            F.collect_list(F.col(id_col)).alias("__ids"),
-            F.first("shset").alias("shset"),
-        )
-        .coalesce(parts)
-    )
-    nonempty = groups.filter(F.size("shset") > 0)
-    members = nonempty.select(
-        F.explode("__ids").alias(id_col), F.col("__rep")
-    )
-    reps = nonempty.select(F.col("__rep").alias(id_col), F.col("shset"))
+    reps = groups.select(F.col("__rep").alias(id_col), F.col("shset"))
     rep_pairs = _lsh_pairs_from_sets(
         reps, id_col, num_hashes, bands, verify_threshold
     )
-    return nonempty, members, rep_pairs
+    return groups, rep_pairs
 
 
 def near_dup_components(
@@ -601,7 +594,7 @@ def near_dup_components(
     # not persisted: single consumer on the collapsed path (see
     # minhash_lsh_pairs)
     sets = shingle_hash_sets(df, text_col, id_col, n)
-    groups, _, rep_pairs = _minhash_collapse_graph(
+    groups, rep_pairs = _minhash_collapse_graph(
         sets, id_col, num_hashes, bands, verify_threshold
     )
     # groups holds one row per distinct set with __rep and the full
@@ -625,39 +618,26 @@ def near_dup_components(
 
 
 def _expand_collapsed_pairs(
-    rep_pairs: DataFrame,
-    members: DataFrame,
-    id_col: str,
-    threshold: float,
-    value_col: str = "jaccard",
-    within_value: Column | None = None,
-    within_keep: bool | None = None,
-    within_values: DataFrame | None = None,
-    within_groups: DataFrame | None = None,
+    rep_pairs: DataFrame, groups: DataFrame, value_col: str, within: Column
 ) -> DataFrame:
-    """Reconstruct the full (id_a, id_b, <value>) list from representative
-    pairs plus the ``(id_col, __rep)`` membership map: cross-group pairs
-    inherit the representatives' value (every member of rep_a's group
-    pairs with every member of rep_b's); within-group pairs are identical
-    inputs — jaccard exactly 1.0 / hamming exactly 0 (``within_value``),
-    kept iff the operator's threshold admits the self-similarity
-    (``within_keep``, default: jaccard semantics ``threshold <= 1.0``).
-    When the self-similarity is a COMPUTED per-group quantity (FP cosine),
-    pass ``within_values`` — a ``(__rep, value_col)`` frame joined onto
-    the within pairs; groups absent from it emit nothing.
+    """Reconstruct the full (id_a, id_b, <value_col>) list from
+    representative pairs plus the :func:`_collapse_exact` groups frame.
 
-    ``within_groups``: a ``(__rep, __ids)`` frame carrying each group's
-    full member-id array (the collapse aggregate already holds it). When
-    given, within-group pairs are expanded IN-TASK from the sorted array
-    (:func:`_pair_arr`) instead of self-joining the membership map on
-    ``__rep`` — one cache read and zero exchanges replace two reads plus
-    a join, and a d-member group emits its d(d-1)/2 pairs from one
-    d-element array row instead of d x d join rows through a hash join
-    (guide §2.4/§2.2 — the skew story strictly improves). Pair set
-    identical: both forms emit every (id_a < id_b) combination of the
-    group's members."""
-    ma = members.select(F.col("__rep").alias("id_a"), F.col(id_col).alias("__da"))
-    mb = members.select(F.col("__rep").alias("id_b"), F.col(id_col).alias("__db"))
+    Cross-group pairs inherit the representatives' value: every member of
+    rep_a's group pairs with every member of rep_b's, through the one
+    membership map ``explode(__ids)``. Within-group pairs are identical
+    inputs; they carry ``within``, a per-group value evaluated on the
+    group row (jaccard 1.0, hamming 0, the computed FP self-cosine) that
+    is NULL when the operator's threshold rejects that self-similarity.
+    It is evaluated only on groups with at least two members — the
+    uncollapsed path never pairs a singleton, so evaluating it there
+    could add failure modes (ANSI divide-by-zero on a lone zero vector).
+    Within pairs expand in-task from the member array
+    (:func:`_pair_blocks`), so a d-member group costs no join rows and
+    its pair arrays stay bounded however large d is."""
+    members = groups.select(F.explode("__ids").alias("__d"), F.col("__rep"))
+    ma = members.select(F.col("__rep").alias("id_a"), F.col("__d").alias("__da"))
+    mb = members.select(F.col("__rep").alias("id_b"), F.col("__d").alias("__db"))
     cross = (
         rep_pairs.join(ma, "id_a")
         .join(mb, "id_b")
@@ -667,32 +647,15 @@ def _expand_collapsed_pairs(
             value_col,
         )
     )
-    if within_groups is not None:
-        within = (
-            within_groups.filter(F.size("__ids") >= 2)
-            .select(
-                "__rep",
-                F.explode(_pair_arr(F.sort_array(F.col("__ids")))).alias("__p"),
-            )
-            .select("__rep", F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b"))
-        )
-    else:
-        wa = members.select("__rep", F.col(id_col).alias("id_a"))
-        wb = members.select("__rep", F.col(id_col).alias("id_b"))
-        within = wa.join(wb, "__rep").filter(F.col("id_a") < F.col("id_b"))
-    if within_values is not None:
-        within = within.join(within_values, "__rep").select(
-            "id_a", "id_b", value_col
-        )
-    else:
-        if within_value is None:
-            within_value = F.lit(1.0)
-        within = within.select("id_a", "id_b", within_value.alias(value_col))
-    if within_keep is None:
-        within_keep = threshold <= 1.0
-    if not within_keep:
-        within = within.filter(F.lit(False))
-    return cross.unionByName(within)
+    multi = (
+        groups.filter(F.size("__ids") >= 2)
+        .select("__ids", within.alias(value_col))
+        .filter(F.col(value_col).isNotNull())
+    )
+    within_pairs = _pair_blocks(multi, value_col).select(
+        F.inline("__p"), value_col
+    )
+    return cross.unionByName(within_pairs)
 
 
 def _band_buckets(
@@ -736,25 +699,60 @@ def _band_buckets(
     )
 
 
-def _pair_arr(arr: Column) -> Column:
-    """All (id_a < id_b) pairs of a SORTED id array as an array of structs
-    — the in-task pair expansion shared by :func:`_bucket_pairs` and the
-    within-group leg of :func:`_expand_collapsed_pairs`."""
-    return F.flatten(
+# Largest id block of the pair expander: no generated pair array holds
+# more than _PAIR_BLOCK**2 pairs (~2 MB), however large the group or
+# bucket: a single array of all d(d-1)/2 pairs would be one row that
+# cannot spill, and past d ~ 65.5k ids Spark refuses to build it
+# (COLLECTION_SIZE_LIMIT_EXCEEDED).
+_PAIR_BLOCK = 256
+
+
+def _pair_blocks(frame: DataFrame, *keep: str) -> DataFrame:
+    """``(*keep, __p)`` rows whose ``__p`` arrays of (id_a < id_b) structs
+    together hold every pair of each row's ``__ids`` exactly once — the
+    in-task pair expansion shared by :func:`_bucket_pairs` and the
+    within-group leg of :func:`_expand_collapsed_pairs`.
+
+    The sorted id array splits into blocks of ``_PAIR_BLOCK`` ids, and
+    one row per block pair (i <= j) carries that pair's array: the upper
+    triangle of block i when i == j, the full block-i x block-j cross
+    otherwise (sorted distinct ids make every block-i id smaller than
+    every block-j id). The index explodes are O(d / _PAIR_BLOCK)
+    elements and the pair arrays O(_PAIR_BLOCK**2), so task memory is
+    bounded per row while the output volume stays d(d-1)/2."""
+    b = _PAIR_BLOCK
+    ids = F.col("__ids")
+    last = ((F.size(ids) - 1) / b).cast("int")
+    rows = (
+        frame.select(*keep, F.sort_array("__ids").alias("__ids"))
+        .select(*keep, "__ids", F.explode(F.sequence(F.lit(0), last)).alias("__i"))
+        .select(*keep, "__ids", "__i", F.explode(F.sequence("__i", last)).alias("__j"))
+    )
+    i, j = F.col("__i"), F.col("__j")
+
+    def partners(p: Column) -> Column:
+        # block j from (0-based) position max(j*b, i*b + p + 1): the ids
+        # after x when i == j, all of block j when i < j
+        lo = F.greatest(j * b, i * b + p + 1)
+        return F.slice(ids, lo + 1, (j + 1) * b - lo)
+
+    pairs = F.flatten(
         F.transform(
-            arr,
-            lambda x, i: F.transform(
-                F.slice(arr, i + F.lit(2), F.size(arr)),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+            F.slice(ids, i * b + 1, b),
+            lambda x, p: F.transform(
+                partners(p), lambda y: F.struct(x.alias("id_a"), y.alias("id_b"))
             ),
         )
     )
+    return rows.select(*keep, pairs.alias("__p"))
 
 
 def _bucket_pairs(buckets: DataFrame, id_col: str, keys: list[str]) -> DataFrame:
     """Distinct ordered candidate pairs from a ``(*keys, id_col)`` bucket
     stream: group the ids per bucket and emit every in-bucket (id_a <
-    id_b) pair from the sorted id array.
+    id_b) pair through :func:`_pair_blocks`. ``id_col`` may be a struct
+    led by the id, to carry a small payload into the pairs (hamming's
+    signature); members then order by that leading id.
 
     Versus the bucket SELF-join formulation (``a.join(b, keys)`` + ``id_a
     < id_b``) this evaluates the bucket-building subtree ONCE instead of
@@ -763,20 +761,16 @@ def _bucket_pairs(buckets: DataFrame, id_col: str, keys: list[str]) -> DataFrame
     exchange-consumer chains with one groupBy exchange (guide §2.4 —
     fewer shuffles; §2.3 — the grouped rows carry only ids). The pair
     volume is identical — a d-member bucket yields d(d-1)/2 candidates
-    either way — but here they are generated inside the bucket's task
-    from one d-element array; LSH band/bucket parameters bound d exactly
-    as they bounded the join's per-bucket row blowup. Cross-bucket
-    duplicate pairs are removed by the same final ``distinct``."""
+    either way — but here they are generated inside the bucket's task,
+    in arrays bounded by the pair block, so a degenerate bucket costs
+    time, never an unspillable row. Cross-bucket duplicate pairs are
+    removed by the same final ``distinct``."""
     grouped = (
         buckets.groupBy(*keys)
-        .agg(F.sort_array(F.collect_set(F.col(id_col))).alias("__ids"))
+        .agg(F.collect_set(F.col(id_col)).alias("__ids"))
         .filter(F.size("__ids") >= 2)
     )
-    return (
-        grouped.select(F.explode(_pair_arr(F.col("__ids"))).alias("__p"))
-        .select(F.col("__p.id_a").alias("id_a"), F.col("__p.id_b").alias("id_b"))
-        .distinct()
-    )
+    return _pair_blocks(grouped).select(F.inline("__p")).distinct()
 
 
 def _lsh_pairs_from_sets(
@@ -879,21 +873,21 @@ def hamming_near_pairs(
     prefix_bands: int = 4,
     collapse_exact: bool = True,
 ) -> DataFrame:
-    """Banded Hamming-distance self-join over ANY 64-bit signature column
+    """Banded Hamming-distance pairs over ANY 64-bit signature column
     (SimHash, perceptual image hash, audio fingerprint): band into
-    ``prefix_bands`` equal chunks, equi-join on (band, chunk), verify
-    exact distance with bit_count(xor). Exact — not approximate — while
-    ``max_hamming < prefix_bands`` (pigeonhole: a qualifying pair must
-    agree on at least one whole chunk), with candidate generation a plain
-    bucketed equi-join, never all-pairs.
+    ``prefix_bands`` equal chunks, pair the ids sharing a (band, chunk)
+    bucket (:func:`_bucket_pairs`), verify exact distance with
+    bit_count(xor). Exact — not approximate — while ``max_hamming <
+    prefix_bands`` (pigeonhole: a qualifying pair must agree on at least
+    one whole chunk), with candidate generation bucketed, never
+    all-pairs. Null signatures match nothing.
 
-    ``collapse_exact`` (default on): d identical signatures put d^2 rows
-    in every one of their chunk buckets; as in the other pair operators,
-    the banded join runs on one representative per distinct signature
-    (the hash value itself is the group key — a plain long) and pairs
-    are reconstructed afterward, within-group at hamming exactly 0.
-    Null-signature rows can never match a chunk join and are excluded
-    from groups, exactly as the uncollapsed join excludes them."""
+    ``collapse_exact`` (default on): d identical signatures put d^2
+    candidates in every one of their chunk buckets; as in the other pair
+    operators, the banding runs on one representative per distinct
+    signature (the hash value itself is the group key — a plain long)
+    and pairs are reconstructed afterward, within-group at hamming
+    exactly 0."""
     # pigeonhole guarantee (every qualifying pair shares a chunk) only
     # holds for max_hamming < prefix_bands; auto-widen the banding so the
     # exact-recall contract always holds instead of silently degrading.
@@ -913,31 +907,17 @@ def hamming_near_pairs(
         prefix_bands = widened
     if 64 % prefix_bands:
         raise ValueError("prefix_bands must divide 64")
+    # null signatures can never share a chunk with anything
+    sig = sig.filter(F.col(hash_col).isNotNull())
     if collapse_exact:
-        # one groupBy aggregation (the signature long IS the group key)
-        # — same formulation as _minhash_collapse_graph: map-side
-        # partials collapse co-partitioned duplicates before the
-        # shuffle, no window sort, one coalesced per-distinct-signature
-        # frame instead of a per-doc one.
-        groups = _track(
-            sig.filter(F.col(hash_col).isNotNull())
-            .groupBy(hash_col)
-            .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-            )
-            .coalesce(_collapse_parts(sig))
-        )
-        members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
+        groups = _collapse_exact(sig, id_col, hash_col)
         reps = groups.select(F.col("__rep").alias(id_col), F.col(hash_col))
         rep_pairs = hamming_near_pairs(
             reps, id_col, hash_col, max_hamming, prefix_bands,
             collapse_exact=False,
         )
         return _expand_collapsed_pairs(
-            rep_pairs, members, id_col, threshold=0.0, value_col="hamming",
-            within_value=F.lit(0), within_keep=max_hamming >= 0,
-            within_groups=groups,
+            rep_pairs, groups, "hamming", F.when(F.lit(max_hamming) >= 0, 0)
         )
     chunk_bits = 64 // prefix_bands
     # posexplode (see minhash_lsh_pairs): one pass over sig, not a
@@ -950,23 +930,21 @@ def hamming_near_pairs(
             for c in range(prefix_bands)
         ]
     )
+    # a bucket member is (id, signature): structs sort by id first, so the
+    # pairs stay id-ordered and verify needs no signature re-attach join
+    member = F.struct(F.col(id_col).alias("id"), F.col(hash_col).alias("h"))
     banded = sig.select(
-        F.col(id_col), F.col(hash_col), F.posexplode(chunk_arr).alias("band", "chunk")
+        member.alias("__m"), F.posexplode(chunk_arr).alias("band", "chunk")
     )
-    a = banded.select(
-        F.col(id_col).alias("id_a"), F.col(hash_col).alias("sh_a"), "band", "chunk"
-    )
-    b = banded.select(
-        F.col(id_col).alias("id_b"), F.col(hash_col).alias("sh_b"), "band", "chunk"
-    )
+    hamming = F.bit_count(F.col("id_a.h").bitwiseXOR(F.col("id_b.h")))
     return (
-        a.join(b, ["band", "chunk"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "sh_a", "sh_b")
-        .distinct()
-        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
+        _bucket_pairs(banded, "__m", ["band", "chunk"])
+        .select(
+            F.col("id_a.id").alias("id_a"),
+            F.col("id_b.id").alias("id_b"),
+            hamming.alias("hamming"),
+        )
         .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
     )
 
 

@@ -187,59 +187,22 @@ def embedding_near_dup_lsh(
     not a literal 1.0 — so the last-ulp FP behavior (and the zero-vector
     NaN → filtered case) is bit-identical to the uncollapsed pipeline
     and its SQL oracle."""
-    v = F.col(vec_col).cast("array<double>")
-    if collapse_exact:
-        keyed = df.select(
-            F.col(id_col),
-            v.alias("__v"),
-            F.md5(v.cast("string")).alias("__gk"),
-        )
-        from .dedup import _collapse_parts, _track
+    from .dedup import _bucket_pairs, _collapse_exact, _expand_collapsed_pairs
 
-        # one groupBy aggregation derives the whole collapse state —
-        # same formulation as dedup._minhash_collapse_graph: one
-        # persisted frame holding (rep, member-id array, vector) per
-        # DISTINCT vector (vs the window form's per-doc array-bearing
-        # frame plus separate members/reps persists), map-side partials
-        # on the 16-byte key instead of a window sort. first(__v) is a
-        # valid representative: the group key is the md5 of the rendered
-        # double array and distinct doubles render distinctly, so every
-        # row in a group carries the same values — which member's array
-        # survives is unobservable downstream (buckets, re-attach,
-        # self-cosine are value functions).
-        groups = _track(
-            keyed.groupBy("__gk")
-            .agg(
-                F.min(id_col).alias("__rep"),
-                F.collect_list(F.col(id_col)).alias("__ids"),
-                F.first("__v").alias("__v"),
-            )
-            .coalesce(_collapse_parts(keyed))
+    v = F.col(vec_col).cast("array<double>")
+    vecs = df.select(F.col(id_col), v.alias("__v"))
+    if collapse_exact:
+        groups = _collapse_exact(
+            vecs, id_col, F.md5(F.col("__v").cast("string")), ("__v",)
         )
-        members = groups.select(F.explode("__ids").alias(id_col), F.col("__rep"))
         reps = groups.select(F.col("__rep").alias(id_col), F.col("__v").alias(vec_col))
         rep_pairs = embedding_near_dup_lsh(
             reps, dim, threshold, bits, tables, seed, id_col, vec_col,
             collapse_exact=False,
         )
-        # self-cosine only for groups that actually have within pairs:
-        # evaluating _cos on singleton reps the uncollapsed path never
-        # pairs would add failure modes it doesn't have (ANSI
-        # divide-by-zero on a lone all-zero vector)
-        rep_self = (
-            groups.filter(F.size("__ids") > 1)
-            .select(
-                F.col("__rep"),
-                _cos(F.col("__v"), F.col("__v")).alias("cosine"),
-            )
-            .filter(F.col("cosine") >= threshold)
-        )
-        from .dedup import _expand_collapsed_pairs
-
+        self_cos = _cos(F.col("__v"), F.col("__v"))
         return _expand_collapsed_pairs(
-            rep_pairs, members, id_col, threshold=threshold,
-            value_col="cosine", within_values=rep_self, within_keep=True,
-            within_groups=groups,
+            rep_pairs, groups, "cosine", F.when(self_cos >= threshold, self_cos)
         )
     buckets = F.array(
         *[lsh_bucket(v, dim, bits, seed + 1000003 * t) for t in range(tables)]
@@ -250,13 +213,10 @@ def embedding_near_dup_lsh(
     banded = df.select(
         F.col(id_col), F.posexplode(buckets).alias("table", "bucket")
     )
-    from .dedup import _bucket_pairs
-
     # one pass over the bucket stream (sorted-id-array pair expansion)
     # instead of a bucket self-join that evaluates the signature subtree
     # once per side — see dedup._bucket_pairs
     ids = _bucket_pairs(banded, id_col, ["table", "bucket"])
-    vecs = df.select(F.col(id_col), v.alias("__v"))
     cand = ids.join(
         vecs.select(F.col(id_col).alias("id_a"), F.col("__v").alias("__va")), "id_a"
     ).join(
@@ -466,10 +426,11 @@ def ivf_search(
     # a NaN/Inf component (reachable when any corpus embedding carries
     # NaN — ivf_build's means propagate it) would render as 'nanD' /
     # 'infD', which Spark SQL cannot parse, and an overflowed norm would
-    # change the cosine; the general plan merely produces NaN cosines
-    # ranked deterministically, so it is the safe fallback.
+    # change the cosine; the general plan merely produces NaN (or, for a
+    # NULL component, NULL) cosines ranked deterministically, so it is
+    # the safe fallback.
     def _row_finite(row) -> bool:
-        vec = [float(y) for y in (row["centroid"] or [])]
+        vec = [math.nan if y is None else float(y) for y in (row["centroid"] or [])]
         return all(map(math.isfinite, vec)) and math.isfinite(
             math.sqrt(sum((v * v for v in vec), 0.0))
         )

@@ -255,7 +255,9 @@ def asof_join_same_source(
         Window.partitionBy(*by)
         .orderBy(
             F.col(on).asc(),
-            (~right_ok).cast("int").asc(),  # right rows first at equal on
+            # right rows first at equal on; a NULL right_filter is "not a
+            # right row", never a NULL marker sorting before the right rows
+            F.when(right_ok, 0).otherwise(1).asc(),
             *[F.col(t).asc() for t in tiebreak],
         )
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

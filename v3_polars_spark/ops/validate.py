@@ -41,7 +41,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-@dataclass
+@dataclass(eq=False)
 class Check:
     """One validation rule: either a fusable single-table aggregate
     (``df`` + the two aggregate columns) or a prebuilt one-row report
