@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import os
 import sys
+import weakref
 from collections.abc import Callable
 from functools import reduce
 
@@ -44,7 +45,22 @@ def _prep(spark: SparkSession) -> SparkSession:
     return spark
 
 
-_TABLE_CACHE: dict = {}
+# Per-session memos: session -> {key: value}. Keyed weakly on the session
+# object itself, never on id(spark): a stopped session's id can be reused
+# by the next one, which must not be served the old session's frames.
+# _TABLE_CACHE holds loaded tables and fixtures, _PLAN_MEMO built queries.
+_TABLE_CACHE: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_PLAN_MEMO: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _session_memo(spark, key: tuple, build: Callable, memo=None):
+    """``build()``, computed once per (session, key) and memoized in
+    ``memo`` (default ``_TABLE_CACHE``)."""
+    per = (_TABLE_CACHE if memo is None else memo).setdefault(spark, {})
+    if key not in per:
+        per[key] = build()
+    return per[key]
+
 
 # Tables big enough that a single-file local read would otherwise cache as
 # ONE partition, pinning every downstream map stage (partial aggs, regex
@@ -171,9 +187,10 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     query from that cache (reference v3/state.py:97-106,114-174); here
     `.cache()` is the Spark analog, populated lazily on first action."""
     _prep(spark)
-    key = (id(spark), sf_dir, name)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
+    return _session_memo(spark, (sf_dir, name), lambda: _load(spark, sf_dir, name))
+
+
+def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         # events.parquet carries TIMESTAMP(NANOS), which Spark's vectorized
@@ -202,9 +219,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif df.rdd.getNumPartitions() < par:
             df = df.repartition(par)
-    df = df.cache()
-    _TABLE_CACHE[key] = df
-    return df
+    return df.cache()
 
 
 def _ref_mb(spark: SparkSession) -> DataFrame:
@@ -213,10 +228,7 @@ def _ref_mb(spark: SparkSession) -> DataFrame:
     queries and every bench iteration reuse the materialized table instead
     of re-scanning and re-planning the parquet read."""
     _prep(spark)
-    key = (id(spark), "__ref_mb__")
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    mb = (
+    return _session_memo(spark, ("__ref_mb__",), lambda: (
         spark.read.parquet(REF_MB)
         .filter((F.col("chain_name") == "ethereum") & (F.col("address") == REF_POOL))
         .withColumns(
@@ -242,9 +254,7 @@ def _ref_mb(spark: SparkSession) -> DataFrame:
         # irrelevant; the keyed testdata caches keep .cache() — their
         # InMemoryRelation partitioning/ordering is load-bearing.
         .localCheckpoint()
-    )
-    _TABLE_CACHE[key] = mb
-    return mb
+    ))
 
 
 _REF_AS_OF = 12376626.0
@@ -254,11 +264,12 @@ REF_EXAMPLES = "/root/reference/v3/data/examples"
 def _ref_table(spark: SparkSession, table: str) -> DataFrame:
     """A reference example table for the MULTI-pool pipeline: ethereum
     rows of all pools, typed, with as_of, cached once per session."""
+    return _session_memo(spark, ("__ref_all__", table), lambda: _load_ref(spark, table))
+
+
+def _load_ref(spark: SparkSession, table: str) -> DataFrame:
     from v3_polars_spark import tables as T
 
-    key = (id(spark), "__ref_all__", table)
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
     _prep(spark)
     df = T.read_table(spark, REF_EXAMPLES, table).filter(
         F.col("chain_name") == "ethereum"
@@ -278,9 +289,7 @@ def _ref_table(spark: SparkSession, table: str) -> DataFrame:
         df = T.with_as_of(df)
     elif table == "factory_pool_created":
         df = df.withColumnRenamed("pool", "address")
-    df = df.localCheckpoint()  # see _ref_mb: lineage-free fixture frame
-    _TABLE_CACHE[key] = df
-    return df
+    return df.localCheckpoint()  # see _ref_mb: lineage-free fixture frame
 
 
 def _ref_liq(spark: SparkSession) -> DataFrame:
@@ -290,12 +299,11 @@ def _ref_liq(spark: SparkSession) -> DataFrame:
     cached member the other pipelines read (v3/state.py working set)."""
     from v3_polars_spark.v3 import liquidity_distribution
 
-    key = (id(spark), "__ref_liq__")
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    liq = liquidity_distribution(_ref_mb(spark), as_of=_REF_AS_OF).localCheckpoint()
-    _TABLE_CACHE[key] = liq
-    return liq
+    return _session_memo(
+        spark,
+        ("__ref_liq__",),
+        lambda: liquidity_distribution(_ref_mb(spark), as_of=_REF_AS_OF).localCheckpoint(),
+    )
 
 
 def _ref_swap_frame(spark: SparkSession) -> DataFrame:
@@ -306,14 +314,13 @@ def _ref_swap_frame(spark: SparkSession) -> DataFrame:
     engine does operationally. O(#initialized ticks) rows."""
     from v3_polars_spark.v3.swap import swap_frame
 
-    key = (id(spark), "__ref_swap_frame__")
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    sf_df = swap_frame(
-        _ref_liq(spark), tick_spacing=60, min_liquidity=1e9
-    ).localCheckpoint()
-    _TABLE_CACHE[key] = sf_df
-    return sf_df
+    return _session_memo(
+        spark,
+        ("__ref_swap_frame__",),
+        lambda: swap_frame(
+            _ref_liq(spark), tick_spacing=60, min_liquidity=1e9
+        ).localCheckpoint(),
+    )
 
 
 def _values_df(spark: SparkSession, rows, cols) -> DataFrame:
@@ -345,27 +352,23 @@ def _ref_swap_depth(spark: SparkSession) -> DataFrame:
     the reference caches its createSwapDF arrays per as_of."""
     from v3_polars_spark.v3.swap import InRangeValues, swap_depth
 
-    key = (id(spark), "__ref_swap_depth__")
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    d = swap_depth(
-        _ref_swap_frame(spark), InRangeValues(**_QL_IRV), token_in_is_token1=False
-    ).localCheckpoint()
-    _TABLE_CACHE[key] = d
-    return d
+    return _session_memo(
+        spark,
+        ("__ref_swap_depth__",),
+        lambda: swap_depth(
+            _ref_swap_frame(spark), InRangeValues(**_QL_IRV), token_in_is_token1=False
+        ).localCheckpoint(),
+    )
 
 
 def _ql_amounts(spark: SparkSession) -> DataFrame:
     """The quote-ladder amount batch, built once per session (a 5-row
     createDataFrame is ~20 py4j round trips per call otherwise)."""
-    key = (id(spark), "__ql_amounts__")
-    if key in _TABLE_CACHE:
-        return _TABLE_CACHE[key]
-    amounts = _values_df(
-        spark, list(enumerate(_QL_AMOUNTS)), ["quote_id", "amount_in"]
+    return _session_memo(
+        spark,
+        ("__ql_amounts__",),
+        lambda: _values_df(spark, list(enumerate(_QL_AMOUNTS)), ["quote_id", "amount_in"]),
     )
-    _TABLE_CACHE[key] = amounts
-    return amounts
 
 
 def _ts_str(col: str, alias: str):
@@ -1106,6 +1109,17 @@ def dp_embed_neardup_lsh(spark, sf):
     return embedding_near_dup_lsh(e, dim=64, threshold=0.4, bits=4, tables=8)
 
 
+def _ivf_index(spark, sf, e):
+    """The cached (centroids, assigned corpus) IVF index, once per session."""
+    from v3_polars_spark.datapipe import ivf_index
+
+    def build():
+        centroids, assigned = ivf_index(e, n_centroids=8, iters=1)
+        return centroids.cache(), assigned.cache()
+
+    return _session_memo(spark, (sf, "__ivf_idx__"), build)
+
+
 def dp_embed_topk_ivf(spark, sf):
     """IVF approximate top-k: deterministic coarse quantizer (md5-prefix
     seed pick + one Lloyd step, all column ops), probe 3 of 8 inverted
@@ -1114,14 +1128,10 @@ def dp_embed_topk_ivf(spark, sf):
     The index (centroids + assigned corpus) is built once per session and
     cached — the operational shape of ANN serving: queries probe a
     prebuilt index, they don't re-cluster the corpus."""
-    from v3_polars_spark.datapipe import ivf_index, ivf_search
+    from v3_polars_spark.datapipe import ivf_search
 
     e = _t(spark, sf, "embeddings")
-    key = (id(spark), sf, "__ivf_idx__")
-    if key not in _TABLE_CACHE:
-        centroids, assigned = ivf_index(e, n_centroids=8, iters=1)
-        _TABLE_CACHE[key] = (centroids.cache(), assigned.cache())
-    centroids, assigned = _TABLE_CACHE[key]
+    centroids, assigned = _ivf_index(spark, sf, e)
     q = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1144,16 +1154,11 @@ def dp_ann_recall(spark, sf):
         ann_recall_check,
         cosine_topk,
         cosine_topk_lsh,
-        ivf_index,
         ivf_search,
     )
 
     e = _t(spark, sf, "embeddings")
-    key = (id(spark), sf, "__ivf_idx__")
-    if key not in _TABLE_CACHE:
-        centroids, assigned = ivf_index(e, n_centroids=8, iters=1)
-        _TABLE_CACHE[key] = (centroids.cache(), assigned.cache())
-    centroids, assigned = _TABLE_CACHE[key]
+    centroids, assigned = _ivf_index(spark, sf, e)
     q = e.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
@@ -1804,11 +1809,11 @@ def q_normalize(spark, sf):
 
 def q_liquidity_multi(spark, sf):
     """The SCALE path of the flagship pipeline: liquidity distributions for
-    MANY pools in one distributed plan (liquidity_distribution_multi —
+    MANY pools in one distributed plan (liquidity_distribution with by —
     per-pool partitioned group-sums, coalescing outer join, partitioned
     prefix sum; no single-task stage). Driven by a lineitem-derived
     synthetic mint/burn frame with integral amounts so sums are exact."""
-    from v3_polars_spark.v3 import liquidity_distribution_multi
+    from v3_polars_spark.v3 import liquidity_distribution
 
     li = _t(spark, sf, "lineitem")
     mb = li.select(
@@ -1822,7 +1827,7 @@ def q_liquidity_multi(spark, sf):
             "type_of_event"
         ),
     )
-    out = liquidity_distribution_multi(mb, as_of=None, by=["pool"])
+    out = liquidity_distribution(mb, as_of=None, by=["pool"])
     return out.select("pool", "tick", "liquidity")
 
 
@@ -2039,9 +2044,6 @@ def dp_boilerplate(spark, sf):
         "n_lines_removed",
         F.md5(F.col("text")).alias("clean_fp"),
     )
-
-
-_PLAN_MEMO: dict = {}
 
 
 def q_approx_distinct(spark, sf):
@@ -3157,11 +3159,9 @@ def _sql_query(template: str):
     def run(spark, sf):
         from v3_polars_spark.sql import register_testdata
 
-        key = (id(spark), sf, "__views__")
-        views = _TABLE_CACHE.get(key)
-        if views is None:
-            views = register_testdata(spark, sf, _t)
-            _TABLE_CACHE[key] = views
+        views = _session_memo(
+            spark, (sf, "__views__"), lambda: register_testdata(spark, sf, _t)
+        )
         return spark.sql(template.format(**views))
 
     return run
@@ -3203,12 +3203,9 @@ def _memo_query(name: str, fn):
     on the memoized frame recomputes from the (cached) source tables."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        key = (id(spark), sf_dir, name)
-        df = _PLAN_MEMO.get(key)
-        if df is None:
-            df = fn(spark, sf_dir)
-            _PLAN_MEMO[key] = df
-        return df
+        return _session_memo(
+            spark, (sf_dir, name), lambda: fn(spark, sf_dir), _PLAN_MEMO
+        )
 
     wrapped.__doc__ = fn.__doc__
     wrapped.__name__ = getattr(fn, "__name__", name)

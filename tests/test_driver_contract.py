@@ -142,3 +142,25 @@ def test_bench_rejects_unknown_extra_query_before_spark(tmp_path):
     assert out.returncode != 0
     assert "no_such_query" in out.stderr
     assert out.stdout == ""
+
+
+def test_session_memo_keys_on_the_session_object():
+    """A memo entry belongs to its session object: a later session must
+    rebuild even when it reuses a dropped session's id()."""
+
+    class _Session:
+        pass
+
+    calls = []
+
+    def build():
+        calls.append(1)
+        return len(calls)
+
+    first = _Session()
+    assert em._session_memo(first, ("k",), build) == 1
+    assert em._session_memo(first, ("k",), build) == 1
+    del first
+    second = _Session()
+    assert em._session_memo(second, ("k",), build) == 2
+    assert calls == [1, 1]

@@ -122,16 +122,17 @@ def test_quote_ladder_matches_scalar_swap_in(pool, spark):
 
 @pytest.mark.parametrize("wide_threshold", [64, 0])  # fused plan / grid plan
 def test_liquidity_timeline_matches_per_frame_distribution(
-    pool, spark, wide_threshold
+    pool, spark, wide_threshold, monkeypatch
 ):
     """One-plan multi-frame timeline == looping liquidity_distribution per
     frame (the notebook's slice-iteration workload, SURVEY §7.4). Both
     physical plans — the 2-exchange fused conditional-sum plan and the
     many-frame grid plan — must agree with the per-frame loop."""
-    from v3_polars_spark.v3 import liquidity_distribution, liquidity_timeline
+    from v3_polars_spark.v3 import liquidity, liquidity_distribution, liquidity_timeline
 
+    monkeypatch.setattr(liquidity, "WIDE_THRESHOLD", wide_threshold)
     frames = [12372000.0, 12374000.0, 12376626.0]
-    tl = liquidity_timeline(pool.mb, frames, wide_threshold=wide_threshold)
+    tl = liquidity_timeline(pool.mb, frames)
     got = {
         (r["frame_as_of"], r["tick"]): r["liquidity"] for r in tl.collect()
     }

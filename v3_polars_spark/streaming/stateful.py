@@ -120,7 +120,8 @@ def streaming_liquidity_deltas(mb_stream: DataFrame) -> DataFrame:
     Output (update mode): every (tick) touched in a micro-batch with its
     new running ``liquidity_delta``. The batch-equivalent invariant —
     folding all batches equals the one-shot group-sum — is pinned in
-    tests against liquidity_distribution_multi's pre-cumsum deltas."""
+    tests against the pre-cumsum deltas of liquidity_distribution(by=pool
+    keys)."""
     return mb_stream.groupBy("chain_name", "address").applyInPandasWithState(
         _fold_liquidity,
         outputStructType=OUTPUT_SCHEMA,

@@ -1,9 +1,5 @@
 from . import swap_math
-from .liquidity import (
-    liquidity_distribution,
-    liquidity_distribution_multi,
-    liquidity_timeline,
-)
+from .liquidity import liquidity_distribution, liquidity_timeline
 from .pool import Pool
 from .positions import POSITION_COLUMNS, nfp_positions
 from .series import (
@@ -32,7 +28,6 @@ __all__ = [
     "bn_series",
     "in_range_values",
     "liquidity_distribution",
-    "liquidity_distribution_multi",
     "liquidity_timeline",
     "nfp_positions",
     "POSITION_COLUMNS",

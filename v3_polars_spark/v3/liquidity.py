@@ -5,11 +5,12 @@ group-sums (A1) -> coalescing full-outer join (J1) -> ordered prefix sum
 Spark-first plan shape:
   - the two group-sums are hash aggregates with map-side partial agg;
   - the outer join is key-coalescing (USING join) on `tick`;
-  - the prefix sum is a window — partitioned by pool/chain when computing
-    distributions for MANY pools at once (`liquidity_distribution_multi`),
-    which is how this runs at 100 TB: one shuffle per agg, one window,
-    all stages parallel across pools. The single-pool variant keeps the
-    unpartitioned window (the frame is O(#initialized ticks) ≈ 10²-10⁴ rows).
+  - the prefix sum is a window. With ``by`` pool keys (chain, address)
+    every group-sum, the join and the window partition by them, so the
+    distributions of MANY pools come from one plan — one shuffle per agg,
+    one window, all stages parallel across pools, which is how this runs
+    at 100 TB. Without ``by`` (a single pool) the window is unpartitioned:
+    the frame is O(#initialized ticks) ≈ 10²-10⁴ rows.
 """
 
 from __future__ import annotations
@@ -18,19 +19,27 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-
-def _signed_liq(mb: DataFrame, as_of: float | None) -> DataFrame:
-    df = mb
-    if as_of is not None:
-        # strict < : "value before the transaction at that index" (SURVEY §8.2)
-        df = df.filter(F.col("as_of") < F.lit(float(as_of)))
-    return df
+# liquidity_timeline runs the fused plan up to this many frames, the grid
+# plan above it
+WIDE_THRESHOLD = 64
 
 
-def liquidity_distribution(mb: DataFrame, as_of: float | None = None) -> DataFrame:
-    """(tick, liquidity) distribution as of ``as_of`` for a single pool's
-    mint/burn frame (columns: amount double, type_of_event double,
-    tick_lower/upper long, as_of double).
+def _running_sum(by: list[str], order: str):
+    return (
+        Window.partitionBy(*by)
+        .orderBy(F.col(order).asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+
+
+def liquidity_distribution(
+    mb: DataFrame, as_of: float | None = None, by: list[str] = ()
+) -> DataFrame:
+    """(*by, tick, liquidity) distribution as of ``as_of`` (strict <: "value
+    before the transaction at that index", SURVEY §8.2) for a mint/burn
+    frame (columns: amount double, type_of_event double, tick_lower/upper
+    long, as_of double). ``by`` names the pool keys when ``mb`` holds many
+    pools; every pool's distribution then comes from the same plan.
 
     1. +amount*type_of_event grouped on tick_lower  (liquidity added at lower)
     2. -amount*type_of_event grouped on tick_upper  (removed at upper)
@@ -38,71 +47,31 @@ def liquidity_distribution(mb: DataFrame, as_of: float | None = None) -> DataFra
     4. sort by tick, prefix sum
     (reference v3/helpers/swap_math.py:36-69)
     """
-    base = _signed_liq(mb, as_of)
-    tl = (
-        base.withColumn("liquidity_lower", F.col("amount") * F.col("type_of_event"))
-        .groupBy(F.col("tick_lower").alias("tick"))
-        .agg(F.sum("liquidity_lower").alias("liquidity_lower"))
-        .filter(F.col("liquidity_lower") != 0)
-    )
-    tu = (
-        base.withColumn("liquidity_upper", -(F.col("amount") * F.col("type_of_event")))
-        .groupBy(F.col("tick_upper").alias("tick"))
-        .agg(F.sum("liquidity_upper").alias("liquidity_upper"))
-        .filter(F.col("liquidity_upper") != 0)
-    )
+    by = list(by)
+    base = mb if as_of is None else mb.filter(F.col("as_of") < F.lit(float(as_of)))
+    signed = F.col("amount") * F.col("type_of_event")
+
+    def net(bound: str, name: str, delta) -> DataFrame:
+        return (
+            base.withColumn(name, delta)
+            .groupBy(*by, F.col(bound).alias("tick"))
+            .agg(F.sum(name).alias(name))
+            .filter(F.col(name) != 0)
+        )
+
     joined = (
-        tl.join(tu, "tick", "full_outer")
+        net("tick_lower", "liquidity_lower", signed)
+        .join(net("tick_upper", "liquidity_upper", -signed), [*by, "tick"], "full_outer")
         .na.fill(0, subset=["liquidity_lower", "liquidity_upper"])
         .withColumn("delta", F.col("liquidity_lower") + F.col("liquidity_upper"))
-    )
-    w = (
-        Window.orderBy(F.col("tick").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return joined.select(
-        "tick", F.sum("delta").over(w).alias("liquidity")
+        *by, "tick", F.sum("delta").over(_running_sum(by, "tick")).alias("liquidity")
     )
-
-
-def liquidity_distribution_multi(
-    mb: DataFrame, as_of: float | None = None, by: list[str] = ("chain_name", "address")
-) -> DataFrame:
-    """Same semantics, computed for EVERY pool in one distributed plan —
-    the scale path. All shuffles key on (pool keys, tick); the prefix-sum
-    window partitions by pool, so no single-task stage exists."""
-    by = list(by)
-    base = _signed_liq(mb, as_of)
-    tl = (
-        base.withColumn("d", F.col("amount") * F.col("type_of_event"))
-        .groupBy(*by, F.col("tick_lower").alias("tick"))
-        .agg(F.sum("d").alias("liquidity_lower"))
-        .filter(F.col("liquidity_lower") != 0)
-    )
-    tu = (
-        base.withColumn("d", -(F.col("amount") * F.col("type_of_event")))
-        .groupBy(*by, F.col("tick_upper").alias("tick"))
-        .agg(F.sum("d").alias("liquidity_upper"))
-        .filter(F.col("liquidity_upper") != 0)
-    )
-    joined = (
-        tl.join(tu, by + ["tick"], "full_outer")
-        .na.fill(0, subset=["liquidity_lower", "liquidity_upper"])
-        .withColumn("delta", F.col("liquidity_lower") + F.col("liquidity_upper"))
-    )
-    w = (
-        Window.partitionBy(*by)
-        .orderBy(F.col("tick").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return joined.select(*by, "tick", F.sum("delta").over(w).alias("liquidity"))
 
 
 def liquidity_timeline(
-    mb: DataFrame,
-    frame_as_ofs: list[float],
-    by: list[str] | None = None,
-    wide_threshold: int = 64,
+    mb: DataFrame, frame_as_ofs: list[float], by: list[str] = ()
 ) -> DataFrame:
     """Liquidity distribution at MANY as-of frames in one distributed plan
     — the scale re-expression of the crosschain animation notebook, which
@@ -113,7 +82,7 @@ def liquidity_timeline(
     deltas contribute to every frame strictly after its as_of — SURVEY
     §8.2's strict-< convention):
 
-    - **fused** (#frames <= ``wide_threshold``): ONE hash aggregation
+    - **fused** (#frames <= ``WIDE_THRESHOLD``): ONE hash aggregation
       computes, per tick, the frame-axis cumulative net delta for every
       frame as a conditional sum column (``sum(when(as_of < frame_i,
       delta))`` — the "cumulative" is free because an event counts toward
@@ -121,7 +90,7 @@ def liquidity_timeline(
       single tick-axis cumsum window. Exactly TWO exchanges (group-by,
       window) regardless of #frames — the floor-dominant shape for the
       animation workload's dozens of frames.
-    - **grid** (#frames > ``wide_threshold``): tag each delta with its
+    - **grid** (#frames > ``WIDE_THRESHOLD``): tag each delta with its
       first covering frame, group once per (frame, tick), densify with a
       frame x tick grid, and stack two prefix-sum windows (frame axis,
       then tick axis). O(#frames) rows instead of O(#frames) agg columns
@@ -146,12 +115,22 @@ def liquidity_timeline(
             )
             .filter(F.lit(False))
         )
-    if len(frames) <= wide_threshold:
-        return _timeline_fused(mb, frames, by)
-    return _timeline_grid(mb, frames, by)
+    deltas = _tick_deltas(mb, by)
+    if len(frames) <= WIDE_THRESHOLD:
+        dense = _timeline_fused(deltas, frames, by)
+    else:
+        dense = _timeline_grid(deltas, frames, by)
+    return dense.select(
+        *by,
+        "frame_as_of",
+        "tick",
+        F.sum("net").over(_running_sum([*by, "frame_as_of"], "tick")).alias("liquidity"),
+    )
 
 
-def _timeline_fused(mb: DataFrame, frames: list[float], by: list[str]) -> DataFrame:
+def _tick_deltas(mb: DataFrame, by: list[str]) -> DataFrame:
+    """Each event's two signed tick deltas as rows (*by, as_of, tick, delta):
+    +amount*type_of_event at tick_lower, its negation at tick_upper."""
     signed = F.col("amount") * F.col("type_of_event")
     lower = mb.select(
         *by, F.col("as_of"), F.col("tick_lower").alias("tick"), signed.alias("delta")
@@ -159,7 +138,12 @@ def _timeline_fused(mb: DataFrame, frames: list[float], by: list[str]) -> DataFr
     upper = mb.select(
         *by, F.col("as_of"), F.col("tick_upper").alias("tick"), (-signed).alias("delta")
     )
-    deltas = lower.unionByName(upper)
+    return lower.unionByName(upper)
+
+
+def _timeline_fused(deltas: DataFrame, frames: list[float], by: list[str]) -> DataFrame:
+    """(*by, tick, frame_as_of, net): per-frame cumulative net deltas from
+    one conditional-sum aggregation."""
     nets = deltas.groupBy(*by, "tick").agg(
         *[
             F.coalesce(
@@ -178,41 +162,19 @@ def _timeline_fused(mb: DataFrame, frames: list[float], by: list[str]) -> DataFr
             for i, f in enumerate(frames)
         ]
     )
-    dense = nets.select(*by, "tick", F.explode(pairs).alias("p")).select(
+    return nets.select(*by, "tick", F.explode(pairs).alias("p")).select(
         *by, "tick", "p.frame_as_of", "p.net"
     )
-    w_ticks = (
-        Window.partitionBy(*by, "frame_as_of")
-        .orderBy(F.col("tick").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return dense.select(
-        *by, "frame_as_of", "tick", F.sum("net").over(w_ticks).alias("liquidity")
-    )
 
 
-def _timeline_grid(mb: DataFrame, frames: list[float], by: list[str]) -> DataFrame:
+def _timeline_grid(deltas: DataFrame, frames: list[float], by: list[str]) -> DataFrame:
+    """(*by, tick, frame_as_of, net): per-(frame, tick) sums on a dense
+    frame x tick grid, accumulated along the frame axis."""
     frames_arr = F.array(*[F.lit(x).cast(DoubleType()) for x in frames])
-
-    signed = F.col("amount") * F.col("type_of_event")
-    lower = mb.select(
-        *by,
-        F.col("as_of"),
-        F.col("tick_lower").alias("tick"),
-        signed.alias("delta"),
-    )
-    upper = mb.select(
-        *by,
-        F.col("as_of"),
-        F.col("tick_upper").alias("tick"),
-        (-signed).alias("delta"),
-    )
-    deltas = lower.unionByName(upper)
-
-    # first frame strictly after the event; events after the last frame drop
-    first_frame = F.element_at(
-        F.filter(frames_arr, lambda f: f > F.col("as_of")), 1
-    )
+    # first frame strictly after the event; events after the last frame get
+    # NULL (get, unlike element_at, does not raise past the end under ANSI)
+    # and drop
+    first_frame = F.get(F.filter(frames_arr, lambda f: f > F.col("as_of")), F.lit(0))
     per_frame = (
         deltas.withColumn("frame_as_of", first_frame)
         .filter(F.col("frame_as_of").isNotNull())
@@ -226,24 +188,6 @@ def _timeline_grid(mb: DataFrame, frames: list[float], by: list[str]) -> DataFra
     dense = grid.join(per_frame, by + ["frame_as_of", "tick"], "left").na.fill(
         0, subset=["delta"]
     )
-
-    w_frames = (
-        Window.partitionBy(*by, "tick")
-        .orderBy(F.col("frame_as_of").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_ticks = (
-        Window.partitionBy(*by, "frame_as_of")
-        .orderBy(F.col("tick").asc())
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum_delta = F.sum("delta").over(w_frames)
-    return (
-        dense.withColumn("net", cum_delta)
-        .select(
-            *by,
-            "frame_as_of",
-            "tick",
-            F.sum("net").over(w_ticks).alias("liquidity"),
-        )
+    return dense.withColumn(
+        "net", F.sum("delta").over(_running_sum([*by, "tick"], "frame_as_of"))
     )

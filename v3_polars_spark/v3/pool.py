@@ -217,7 +217,7 @@ class Pool:
         sdf = swap_frame(self.create_liq(as_of), self.ts)
         rows = [r.asDict() for r in sdf.collect()]  # O(#ticks) — driver idiom
         irv = in_range_values(rows, float(price), self.ts)
-        self._cache.update({"as_of": as_of, "swap_rows": rows, "irv": irv})
+        self._cache.update({"as_of": as_of, "swap_df": sdf, "swap_rows": rows, "irv": irv})
         return rows, irv
 
     def swap_in(self, calldata: dict):
@@ -255,9 +255,8 @@ class Pool:
         fee attribution array (scalar fee_dict parity); see
         swap.quote_ladder."""
         _, irv = self.calc_swap_df(as_of)
-        sdf = swap_frame(self.create_liq(as_of), self.ts)
         return quote_ladder(
-            sdf,
+            self._cache["swap_df"],
             irv,
             token_in_is_token1=(token_in.lower() == self.token1),
             amounts=amounts,

@@ -16,7 +16,7 @@ import bisect
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from . import swap_math as sm
@@ -38,9 +38,9 @@ class InRangeValues:
 
 def swap_frame(
     liq: DataFrame,
-    tick_spacing: int,
-    max_tick: int = sm.MAX_TICK,
+    tick_spacing: int | Column,
     min_liquidity: float = 0.0,
+    by: list[str] = (),
 ) -> DataFrame:
     """Per-tick-range tradable amounts from a liquidity distribution
     (reference v3/helpers/pool_helpers.py:80-94).
@@ -51,14 +51,21 @@ def swap_frame(
     last range capped at (MAX_TICK//ts)*ts -> p = 1.0001^(t/2) -> x/y
     tradable in each range. All whole-stage-codegen column math; the only
     window is the lead.
+
+    ``tick_spacing`` is an int for one pool or a per-pool column (many
+    pools); ``by`` names the pool keys the lead window partitions by.
+    Every input column but ``tick`` is carried through.
     """
-    cap = (max_tick // tick_spacing) * tick_spacing
-    w = Window.orderBy(F.col("tick").asc())
-    df = (
+    if isinstance(tick_spacing, Column):
+        cap = (F.floor(F.lit(sm.MAX_TICK) / tick_spacing) * tick_spacing).cast("long")
+    else:
+        cap = F.lit((sm.MAX_TICK // tick_spacing) * tick_spacing)
+    w = Window.partitionBy(*by).orderBy(F.col("tick").asc())
+    return (
         liq.filter(F.col("liquidity") > min_liquidity)
         .withColumn("tick_a", F.col("tick"))
-        .withColumn("tick_b", F.coalesce(F.lead("tick", 1).over(w), F.lit(cap)))
-        .select("liquidity", "tick_a", "tick_b")
+        .withColumn("tick_b", F.coalesce(F.lead("tick", 1).over(w), cap))
+        .select(*[c for c in liq.columns if c != "tick"], "tick_a", "tick_b")
         .withColumn("p_a", F.pow(F.lit(1.0001), F.col("tick_a") / F.lit(2.0)))
         .withColumn("p_b", F.pow(F.lit(1.0001), F.col("tick_b") / F.lit(2.0)))
         .withColumn("yInTick", F.col("liquidity") * (F.col("p_b") - F.col("p_a")))
@@ -68,7 +75,6 @@ def swap_frame(
             * ((F.col("p_b") - F.col("p_a")) / (F.col("p_b") * F.col("p_a"))),
         )
     )
-    return df
 
 
 def in_range_values(
@@ -245,6 +251,105 @@ def swap_depth(
     )
 
 
+_FEE_TYPE = "array<struct<tick:bigint,fee:double,liquidity:double>>"
+
+
+def _fee_entry(tick: Column, fee: Column, liquidity: Column) -> Column:
+    return F.struct(
+        tick.cast("long").alias("tick"), fee.alias("fee"), liquidity.alias("liquidity")
+    )
+
+
+def _quote_inputs(a_in: Column, in_range_test: Column, one_minus_fee: Column) -> dict:
+    """The per-quote amounts both branches start from; ``__axis`` is the
+    post-fee amount left after the in-range tick, which the covering-row
+    search compares with the cumulative depth."""
+    left = a_in - in_range_test
+    return {
+        "__swap_in_minus_fee": a_in * one_minus_fee,
+        "__left": left,
+        "__axis": left * one_minus_fee,
+    }
+
+
+def _price_quotes(
+    q: DataFrame,
+    keep: list[str],
+    amount_col: str,
+    zero_for_one: bool,
+    fees: bool,
+    *,
+    irv_tick: Column,
+    irv_liq: Column,
+    sqrt_p: Column,
+    in_range_test: Column,
+    in_range_to_swap: Column,
+    one_minus_fee: Column,
+    fee_frac: Column,
+) -> DataFrame:
+    """swapIn's branch A/B pricing (reference v3/helpers/swap.py:41-212)
+    for quotes that already carry their covering depth row — the shared
+    tail of ``quote_ladder`` and ``quote_ladder_multi``.
+
+    ``q`` holds ``keep``, the ``_quote_inputs`` columns and the covering
+    row's __tick/__liq/__p_a/__p_b/__prev_in/__prev_out, plus __max_cum
+    (and __prev_fees with ``fees``). The in-range scalars are literals for
+    one pool and columns for many; a NULL ``irv_tick`` marks an unpriced
+    quote (NULL branch). Output: ``keep`` + amt_out, sqrt_price_last,
+    branch, sufficient (+ fees). Operand order follows the scalar kernels,
+    so results are bit-identical to ``swap_in``."""
+    is_a = in_range_test > F.col("__swap_in_minus_fee")
+    out_a, spl_a = sm.swap_step_col(
+        zero_for_one, sqrt_p, sqrt_p, F.col("__swap_in_minus_fee"), irv_liq
+    )
+    # final_amt_out_from_tick on the covering tick
+    residual = F.col("__left") - F.col("__prev_in")
+    out_last, spl_b = sm.swap_step_col(
+        zero_for_one, F.col("__p_b"), F.col("__p_a"), residual * one_minus_fee, F.col("__liq")
+    )
+    # same association as the scalar path: last + (in_range_to_swap + prev)
+    out_b = out_last + (in_range_to_swap + F.col("__prev_out"))
+    sufficient = is_a | (
+        F.col("__tick").isNotNull() & (F.col("__max_cum") > F.col("__left"))
+    )
+    # a NULL amount (or unpriced pool) is not sufficient: coalesce to false
+    res = q.withColumn("sufficient", F.coalesce(sufficient, F.lit(False)))
+    insufficient = ~F.col("sufficient")
+    res = res.withColumns(
+        {
+            "amt_out": F.when(insufficient, F.lit(None).cast("double"))
+            .when(is_a, out_a)
+            .otherwise(out_b),
+            "sqrt_price_last": F.when(insufficient, F.lit(None).cast("double"))
+            .when(is_a, spl_a)
+            .otherwise(spl_b),
+            "branch": F.when(irv_tick.isNull(), F.lit(None).cast("string"))
+            .when(is_a, F.lit("A"))
+            .otherwise(F.lit("B")),
+        }
+    )
+    out_cols = [*keep, "amt_out", "sqrt_price_last", "branch", "sufficient"]
+    if fees:
+        # scalar fee_dict parity (swap_in fees=True): branch A charges the
+        # whole amount at the in-range tick; branch B charges the in-range
+        # capacity there, each crossed tick's full tradable input, and the
+        # residual at the covering tick — identical operand order per entry
+        fee_a = F.array(_fee_entry(irv_tick, F.col(amount_col) * fee_frac, irv_liq))
+        fee_b = F.concat(
+            F.array(_fee_entry(irv_tick, in_range_test * fee_frac, irv_liq)),
+            F.col("__prev_fees"),
+            F.array(_fee_entry(F.col("__tick"), residual * fee_frac, F.col("__liq"))),
+        )
+        res = res.withColumn(
+            "fees",
+            F.when(insufficient, F.lit(None).cast(_FEE_TYPE))
+            .when(is_a, fee_a)
+            .otherwise(fee_b),
+        )
+        out_cols.append("fees")
+    return res.select(*out_cols)
+
+
 def quote_ladder(
     swap_df: DataFrame | None,
     irv: InRangeValues,
@@ -273,10 +378,10 @@ def quote_ladder(
     join duplication (the old join×agg shape duplicated every amount row
     per qualifying tick and re-aggregated it back), no shuffle, no
     single-task stage. The only depth-side window is the per-frame
-    cumsum over O(#ticks) rows (single pool — for many pools, partition
-    it by pool keys as liquidity_distribution_multi does).
+    cumsum over O(#ticks) rows (single pool — ``quote_ladder_multi`` is
+    the many-pool form, partitioned by pool keys).
     Insufficient-depth quotes get sufficient=false and NULL outputs
-    instead of the scalar assert.
+    instead of the scalar assert; so do NULL amounts.
 
     Output: all ``amounts`` columns + amt_out, sqrt_price_last, branch
     ('A'|'B'), sufficient; with ``fees=True`` also ``fees`` — an
@@ -299,13 +404,8 @@ def quote_ladder(
     darr = depth if depth is not None else swap_depth(swap_df, irv, token_in_is_token1)
 
     # --- amount side: one narrow stage, no shuffle -----------------------
-    a_in = F.col(amount_col)
     amt = amounts.withColumns(
-        {
-            "__swap_in_minus_fee": a_in * F.lit(1 - fee_frac),
-            "__left": a_in - F.lit(in_range_test),
-            "__axis": (a_in - F.lit(in_range_test)) * F.lit(1 - fee_frac),
-        }
+        _quote_inputs(F.col(amount_col), F.lit(in_range_test), F.lit(1 - fee_frac))
     )
 
     axis = F.col("__axis")
@@ -326,101 +426,27 @@ def quote_ladder(
             F.array_sort(
                 F.transform(
                     F.filter(F.col("__darr"), lambda d: d["__cum_in"] < axis),
-                    lambda d: F.struct(
-                        d["__tick"].alias("tick"),
-                        (d["__in_amt"] * F.lit(fee_frac)).alias("fee"),
-                        d["__liq"].alias("liquidity"),
+                    lambda d: _fee_entry(
+                        d["__tick"], d["__in_amt"] * F.lit(fee_frac), d["__liq"]
                     ),
                 )
             ).alias("__prev_fees")
         )
     joined = amt.join(F.broadcast(darr), F.lit(True), "left").select(*proj)
-
-    is_a = F.lit(in_range_test) > F.col("__swap_in_minus_fee")
-    liq, sp = F.lit(irv.liquidity), F.lit(irv.sqrt_p)
-
-    # branch A column math (get_next_price_amount{0,1} + get_amount{1,0}_delta)
-    if zero_for_one:
-        spl_a = (liq * sp) / (liq + F.col("__swap_in_minus_fee") * sp)
-        lo_a, hi_a = F.least(spl_a, sp), F.greatest(spl_a, sp)
-        out_a = liq * (hi_a - lo_a)                       # amount1 delta
-    else:
-        spl_a = sp + F.col("__swap_in_minus_fee") / liq
-        lo_a, hi_a = F.least(spl_a, sp), F.greatest(spl_a, sp)
-        out_a = liq * ((hi_a - lo_a) / (hi_a * lo_a))     # amount0 delta
-
-    # branch B column math (final_amt_out_from_tick on the covering tick)
-    left_mf = (F.col("__left") - F.col("__prev_in")) * F.lit(1 - fee_frac)
-    bl = F.col("__liq")
-    if zero_for_one:
-        spl_b = (bl * F.col("__p_b")) / (bl + left_mf * F.col("__p_b"))
-        lo_b, hi_b = F.least(spl_b, F.col("__p_b")), F.greatest(spl_b, F.col("__p_b"))
-        out_last = bl * (hi_b - lo_b)
-    else:
-        spl_b = F.col("__p_a") + left_mf / bl
-        lo_b, hi_b = F.least(spl_b, F.col("__p_a")), F.greatest(spl_b, F.col("__p_a"))
-        out_last = bl * ((hi_b - lo_b) / (hi_b * lo_b))
-    # same association as the scalar path: last + (in_range_to_swap + prev)
-    out_b = out_last + (F.lit(in_range_to_swap) + F.col("__prev_out"))
-
-    sufficient = is_a | (
-        F.col("__tick").isNotNull() & (F.col("__max_cum") > F.col("__left"))
+    return _price_quotes(
+        joined,
+        amounts.columns,
+        amount_col,
+        zero_for_one,
+        fees,
+        irv_tick=F.lit(irv.tick),
+        irv_liq=F.lit(irv.liquidity),
+        sqrt_p=F.lit(irv.sqrt_p),
+        in_range_test=F.lit(in_range_test),
+        in_range_to_swap=F.lit(in_range_to_swap),
+        one_minus_fee=F.lit(1 - fee_frac),
+        fee_frac=F.lit(fee_frac),
     )
-    res = (
-        joined.withColumn("sufficient", sufficient)
-        .withColumn(
-            "amt_out",
-            F.when(~sufficient, F.lit(None).cast("double"))
-            .when(is_a, out_a)
-            .otherwise(out_b),
-        )
-        .withColumn(
-            "sqrt_price_last",
-            F.when(~sufficient, F.lit(None).cast("double"))
-            .when(is_a, spl_a)
-            .otherwise(spl_b),
-        )
-        .withColumn("branch", F.when(is_a, F.lit("A")).otherwise(F.lit("B")))
-    )
-    out_cols = [*amounts.columns, "amt_out", "sqrt_price_last", "branch", "sufficient"]
-    if fees:
-        # scalar fee_dict parity (swap_in fees=True): branch A charges the
-        # whole amount at the in-range tick; branch B charges the in-range
-        # capacity there, each crossed tick's full tradable input, and the
-        # residual at the covering tick — identical operand order per entry
-        def _entry(tick, fee, liquidity):
-            return F.struct(
-                tick.cast("long").alias("tick"),
-                fee.alias("fee"),
-                liquidity.alias("liquidity"),
-            )
-
-        fee_a = F.array(_entry(F.lit(irv.tick), a_in * F.lit(fee_frac), F.lit(irv.liquidity)))
-        fee_b = F.concat(
-            F.array(
-                _entry(
-                    F.lit(irv.tick),
-                    F.lit(in_range_test * fee_frac),
-                    F.lit(irv.liquidity),
-                )
-            ),
-            F.col("__prev_fees"),
-            F.array(
-                _entry(
-                    F.col("__tick"),
-                    (F.col("__left") - F.col("__prev_in")) * F.lit(fee_frac),
-                    F.col("__liq"),
-                )
-            ),
-        )
-        res = res.withColumn(
-            "fees",
-            F.when(~F.col("sufficient"), F.lit(None))
-            .when(is_a, fee_a)
-            .otherwise(fee_b),
-        )
-        out_cols.append("fees")
-    return res.select(*out_cols)
 
 
 def quote_ladder_multi(
@@ -445,8 +471,13 @@ def quote_ladder_multi(
     the pool keys + ``amount_col``. One direction per call (``zero_for_one``
     — amount rows quote token0-in when true, token1-in when false).
 
-    Output: amounts columns + amt_out, sqrt_price_last, branch, sufficient.
-    Bit-parity with looping Pool.swap_in per pool is pinned in tests.
+    It shares ``swap_frame``, the swap_math column kernels and the branch
+    A/B pricing with ``quote_ladder``; only the plan differs (a join and a
+    per-quote aggregate on pool keys instead of a broadcast depth row).
+
+    Output: amounts columns + amt_out, sqrt_price_last, branch, sufficient
+    (+ fees with ``fees=True``). Bit-parity with looping Pool.swap_in per
+    pool is pinned in tests.
     """
     by = list(by)
 
@@ -471,35 +502,11 @@ def quote_ladder_multi(
     )
 
     # per-pool swap frame (lead window partitioned by pool)
-    from .liquidity import liquidity_distribution_multi
-
-    liqm = liquidity_distribution_multi(mb, as_of, by)
-    w_lead = Window.partitionBy(*by).orderBy(F.col("tick").asc())
-    frame = (
-        liqm.join(meta, by)
-        .filter(F.col("liquidity") > 0)
-        .withColumn("tick_a", F.col("tick"))
-        .withColumn(
-            "tick_b",
-            F.coalesce(
-                F.lead("tick", 1).over(w_lead),
-                (F.floor(F.lit(sm.MAX_TICK) / F.col("__ts")) * F.col("__ts")).cast(
-                    "long"
-                ),
-            ),
-        )
-        .select(*by, "liquidity", "tick_a", "tick_b", "__ts", "__fee")
-        .withColumn("p_a", F.pow(F.lit(1.0001), F.col("tick_a") / F.lit(2.0)))
-        .withColumn("p_b", F.pow(F.lit(1.0001), F.col("tick_b") / F.lit(2.0)))
-        .withColumn("yInTick", F.col("liquidity") * (F.col("p_b") - F.col("p_a")))
-        .withColumn(
-            "xInTick",
-            F.col("liquidity")
-            * ((F.col("p_b") - F.col("p_a")) / (F.col("p_b") * F.col("p_a"))),
-        )
+    frame = swap_frame(
+        liquidity_distribution(mb, as_of, by).join(meta, by), F.col("__ts"), by=by
     )
 
-    # per-pool in-range values (the irv 7-tuple as columns):
+    # per-pool in-range values (the irv scalars as columns):
     # tick floor exactly as the scalar kernel: floor(log((p/Q96)^2)/log(1.0001))
     # then floor-div to spacing (price_x96_to_tick_floor)
     sp = F.col("__price_x96") / F.lit(float(sm.Q96))
@@ -526,21 +533,13 @@ def quote_ladder_multi(
     def _prop(e, name):
         return F.max(F.when(in_range, e)).over(w_pool).alias(name)
 
-    # get_amount{0,1}_delta with explicit ascending operand order
-    ir0 = F.col("liquidity") * (
-        (F.greatest(F.col("p_a"), F.col("__sqrt_p")) - F.least(F.col("p_a"), F.col("__sqrt_p")))
-        / (F.greatest(F.col("p_a"), F.col("__sqrt_p")) * F.least(F.col("p_a"), F.col("__sqrt_p")))
-    )
-    irts0 = F.col("liquidity") * (
-        F.greatest(F.col("p_a"), F.col("__sqrt_p")) - F.least(F.col("p_a"), F.col("__sqrt_p"))
-    )
-    ir1 = F.col("liquidity") * (
-        F.greatest(F.col("p_b"), F.col("__sqrt_p")) - F.least(F.col("p_b"), F.col("__sqrt_p"))
-    )
-    irts1 = F.col("liquidity") * (
-        (F.greatest(F.col("p_b"), F.col("__sqrt_p")) - F.least(F.col("p_b"), F.col("__sqrt_p")))
-        / (F.greatest(F.col("p_b"), F.col("__sqrt_p")) * F.least(F.col("p_b"), F.col("__sqrt_p")))
-    )
+    # in_range_values' capacities for this direction: token0 in measures
+    # from the range's lower price, token1 in from its upper price
+    edge = F.col("p_a" if zero_for_one else "p_b")
+    liq, sqrt_p = F.col("liquidity"), F.col("__sqrt_p")
+    d0 = sm.amount0_delta_col(edge, sqrt_p, liq)
+    d1 = sm.amount1_delta_col(edge, sqrt_p, liq)
+    irt, irts = (d0, d1) if zero_for_one else (d1, d0)
     fr = (
         frame.join(F.broadcast(pool_sp), by)
         .withColumn(
@@ -553,20 +552,14 @@ def quote_ladder_multi(
             "*",
             _prop(F.col("tick_a"), "__irv_tick"),
             _prop(F.col("liquidity"), "__irv_liq"),
-            _prop(ir0, "__in_range0"),
-            _prop(irts0, "__in_range_to_swap0"),
-            _prop(ir1, "__in_range1"),
-            _prop(irts1, "__in_range_to_swap1"),
+            _prop(irt, "__irt"),
+            _prop(irts, "__irts"),
         )
         # pools whose price row lands outside every held tick had no irv
         # row before (inner join) — same drop here
         .filter(F.col("__irv_tick").isNotNull())
     )
-    irv_cols = [
-        "__irv_tick", "__irv_liq", "__sqrt_p", "__ts", "__fee",
-        "__in_range0", "__in_range_to_swap0",
-        "__in_range1", "__in_range_to_swap1",
-    ]
+    irv_cols = ["__irv_tick", "__irv_liq", "__sqrt_p", "__fee", "__irt", "__irts"]
     # per-pool direction-ordered depth with cumulative/preceding sums,
     # PLUS the per-pool in-range "anchor" row, in the SAME pass (r12 plan
     # diet step 2): the irv scalars are already columns on every fr row,
@@ -586,15 +579,10 @@ def quote_ladder_multi(
         order = F.col("tick_a").asc()
     in_dir = F.when(directional, F.col(in_key))
     out_dir = F.when(directional, F.col(out_key))
-    w_cum = Window.partitionBy(*by).orderBy(order).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    w_prev = Window.partitionBy(*by).orderBy(order).rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    w_all = Window.partitionBy(*by).orderBy(order).rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
+    w = Window.partitionBy(*by).orderBy(order)
+    w_cum = w.rowsBetween(Window.unboundedPreceding, 0)
+    w_prev = w.rowsBetween(Window.unboundedPreceding, -1)
+    w_all = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     # per-pool max cum rides along in the same partitioned window pass
     # (positive tick amounts: max(cum) == full-frame ordered sum) — no
     # separate aggregate, no persist, no extra join. The anchor sorts
@@ -617,12 +605,7 @@ def quote_ladder_multi(
     # amount side: ONE join — pool keys only; per-quote scalars are
     # derived from the joined irv columns (identical on every row of the
     # pool, so F.first in the aggregate is deterministic)
-    in_range_test = F.col("__in_range0") if zero_for_one else F.col("__in_range1")
-    in_range_to_swap = (
-        F.col("__in_range_to_swap0") if zero_for_one else F.col("__in_range_to_swap1")
-    )
     one_minus_fee = F.lit(1.0) - F.col("__fee") / F.lit(1e6)
-    a_in = F.col(amount_col)
     amt = amounts.withColumn("__rid", F.monotonically_increasing_id())
     depth_cols = ["__tick", "__liq", "__p_a", "__p_b", "__prev_in", "__prev_out"]
     depth_r = depth.select(
@@ -639,143 +622,45 @@ def quote_ladder_multi(
     # LEFT join: quotes for pools with no depth/anchor rows (no factory
     # row, no price before as_of, no unambiguous in-range tick — states
     # where the scalar path raises) keep flowing with NULL scalars and
-    # resolve to sufficient=false + NULL outputs below, so EVERY input
-    # amount row comes back without a second pass over the frame subtree
-    cand = (
-        amt.join(depth_r, cond, "left")
-        .withColumn("__omf", one_minus_fee)
-        .withColumn("__swap_in_minus_fee", a_in * F.col("__omf"))
-        .withColumn("__left", a_in - in_range_test)
-        .withColumn("__axis", (a_in - in_range_test) * F.col("__omf"))
-        .withColumn("__irt", in_range_test)
-        .withColumn("__irts", in_range_to_swap)
+    # resolve to sufficient=false + NULL outputs, so EVERY input amount
+    # row comes back without a second pass over the frame subtree
+    cand = amt.join(depth_r, cond, "left").withColumns(
+        _quote_inputs(F.col(amount_col), F.col("__irt"), one_minus_fee)
     )
     # the covering row is picked inside the aggregate in BOTH modes now:
     # qual is NULL on non-covering rows (and on the anchor, whose
     # __cum_in is NULL), and min_by/max_by skip NULL ordering keys
     qual = F.when(F.col("__axis") <= F.col("__cum_in"), F.col("__cum_in"))
+    fee_frac = F.col("__fee") / F.lit(1e6)
+    fee_aggs = []
     if fees:
-        fee_frac_c = F.col("__fee") / F.lit(1e6)
-        fee_aggs = [
+        crossed = _fee_entry(F.col("__tick"), F.col("__in_amt") * fee_frac, F.col("__liq"))
+        fee_aggs.append(
             F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("__cum_in") < F.col("__axis"),
-                        F.struct(
-                            F.col("__tick").alias("tick"),
-                            (F.col("__in_amt") * fee_frac_c).alias("fee"),
-                            F.col("__liq").alias("liquidity"),
-                        ),
-                    )
-                )
+                F.collect_list(F.when(F.col("__cum_in") < F.col("__axis"), crossed))
             ).alias("__prev_fees")
-        ]
-    else:
-        fee_aggs = []
-    scalar_cols = [
-        c for c in amounts.columns
-    ] + list(irv_cols) + [
-        "__omf", "__swap_in_minus_fee", "__left", "__axis", "__irt", "__irts",
-    ]
+        )
+    scalar_cols = [*amounts.columns, *irv_cols, "__swap_in_minus_fee", "__left"]
     joined = cand.groupBy("__rid").agg(
         *[F.first(c).alias(c) for c in scalar_cols],
         *[F.min_by(c, qual).alias(c) for c in depth_cols],
         F.max("__max_cum").alias("__max_cum"),
         *fee_aggs,
     )
-
-    is_a = F.col("__irt") > F.col("__swap_in_minus_fee")
-    liq_c, sp_c = F.col("__irv_liq"), F.col("__sqrt_p")
-
-    if zero_for_one:
-        spl_a = (liq_c * sp_c) / (liq_c + F.col("__swap_in_minus_fee") * sp_c)
-        out_a = liq_c * (F.greatest(spl_a, sp_c) - F.least(spl_a, sp_c))
-    else:
-        spl_a = sp_c + F.col("__swap_in_minus_fee") / liq_c
-        out_a = liq_c * (
-            (F.greatest(spl_a, sp_c) - F.least(spl_a, sp_c))
-            / (F.greatest(spl_a, sp_c) * F.least(spl_a, sp_c))
-        )
-
-    left_mf = (F.col("__left") - F.col("__prev_in")) * F.col("__omf")
-    bl = F.col("__liq")
-    if zero_for_one:
-        spl_b = (bl * F.col("__p_b")) / (bl + left_mf * F.col("__p_b"))
-        out_last = bl * (F.greatest(spl_b, F.col("__p_b")) - F.least(spl_b, F.col("__p_b")))
-    else:
-        spl_b = F.col("__p_a") + left_mf / bl
-        out_last = bl * (
-            (F.greatest(spl_b, F.col("__p_a")) - F.least(spl_b, F.col("__p_a")))
-            / (F.greatest(spl_b, F.col("__p_a")) * F.least(spl_b, F.col("__p_a")))
-        )
-    out_b = out_last + (F.col("__irts") + F.col("__prev_out"))
-
-    sufficient = is_a | (
-        F.col("__tick").isNotNull() & (F.col("__max_cum") > F.col("__left"))
-    )
-    res = (
-        joined.withColumn("sufficient", F.coalesce(sufficient, F.lit(False)))
-        .withColumn(
-            "amt_out",
-            F.when(~F.col("sufficient"), F.lit(None).cast("double"))
-            .when(is_a, out_a)
-            .otherwise(out_b),
-        )
-        .withColumn(
-            "sqrt_price_last",
-            F.when(~F.col("sufficient"), F.lit(None).cast("double"))
-            .when(is_a, spl_a)
-            .otherwise(spl_b),
-        )
-        # unpriceable quotes (NULL irv scalars from the left join) keep a
-        # NULL branch — priced-but-insufficient quotes still report theirs
-        .withColumn(
-            "branch",
-            F.when(F.col("__irv_tick").isNull(), F.lit(None).cast("string"))
-            .when(is_a, F.lit("A"))
-            .otherwise(F.lit("B")),
-        )
-    )
-    out_cols = [*amounts.columns, "amt_out", "sqrt_price_last", "branch", "sufficient"]
-    fee_type = "array<struct<tick:bigint,fee:double,liquidity:double>>"
-    if fees:
-        fee_frac_c = F.col("__fee") / F.lit(1e6)
-
-        def _entry(tick, fee, liquidity):
-            return F.struct(
-                tick.cast("long").alias("tick"),
-                fee.alias("fee"),
-                liquidity.alias("liquidity"),
-            )
-
-        fee_a = F.array(
-            _entry(F.col("__irv_tick"), a_in * fee_frac_c, F.col("__irv_liq"))
-        )
-        fee_b = F.concat(
-            F.array(
-                _entry(
-                    F.col("__irv_tick"),
-                    F.col("__irt") * fee_frac_c,
-                    F.col("__irv_liq"),
-                )
-            ),
-            F.col("__prev_fees"),
-            F.array(
-                _entry(
-                    F.col("__tick"),
-                    (F.col("__left") - F.col("__prev_in")) * fee_frac_c,
-                    F.col("__liq"),
-                )
-            ),
-        )
-        res = res.withColumn(
-            "fees",
-            F.when(~F.col("sufficient"), F.lit(None).cast(fee_type))
-            .when(is_a, fee_a)
-            .otherwise(fee_b),
-        )
-        out_cols.append("fees")
     # every-input-row contract holds WITHOUT a union: the LEFT candidate
     # join carries unpriceable quotes through with NULL scalars, which
-    # resolve above to sufficient=false, NULL outputs, NULL branch
-    return res.select(*out_cols)
+    # resolve to sufficient=false, NULL outputs, NULL branch
+    return _price_quotes(
+        joined,
+        amounts.columns,
+        amount_col,
+        zero_for_one,
+        fees,
+        irv_tick=F.col("__irv_tick"),
+        irv_liq=F.col("__irv_liq"),
+        sqrt_p=F.col("__sqrt_p"),
+        in_range_test=F.col("__irt"),
+        in_range_to_swap=F.col("__irts"),
+        one_minus_fee=one_minus_fee,
+        fee_frac=fee_frac,
+    )

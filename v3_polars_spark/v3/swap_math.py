@@ -6,13 +6,17 @@ Uniswap/v3-core SqrtPriceMath.sol / SwapMath.sol). These are deliberately
 driver-side scalars: in the reference every call operates on values already
 extracted from O(#ticks) frames (SURVEY.md §2.9), and the same holds here —
 they never appear inside a per-row distributed path. For batched simulation
-over many swaps, `swap.py` vectorizes the same formulas as column
-expressions.
+over many swaps, the ``*_col`` variants below write the same formulas as
+column expressions with the same operation order, so a batched quote is
+bit-identical to the scalar kernel on the same operands.
 """
 
 from __future__ import annotations
 
 import math
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 Q96 = 2**96
 MAX_TICK = 887272
@@ -92,3 +96,39 @@ def final_amt_out_from_tick(
         )
         amt_out = get_amount0_delta(sqrt_p_next, sqrt_p_last_bottom, liquidity)
     return amt_out, sqrt_p_next
+
+
+# -- column variants (same operand order as the scalars above) --------------
+
+def amount0_delta_col(ratio_a: Column, ratio_b: Column, liq: Column) -> Column:
+    """get_amount0_delta as a column; greatest/least order the operands."""
+    lo, hi = F.least(ratio_a, ratio_b), F.greatest(ratio_a, ratio_b)
+    return liq * ((hi - lo) / (hi * lo))
+
+
+def amount1_delta_col(ratio_a: Column, ratio_b: Column, liq: Column) -> Column:
+    """get_amount1_delta as a column."""
+    return liq * (F.greatest(ratio_a, ratio_b) - F.least(ratio_a, ratio_b))
+
+
+def next_price_amount0_col(ratio_a: Column, liq: Column, amount: Column) -> Column:
+    """get_next_price_amount0 with add=True (token0 in)."""
+    return (liq * ratio_a) / (liq + amount * ratio_a)
+
+
+def next_price_amount1_col(ratio_a: Column, liq: Column, amount: Column) -> Column:
+    """get_next_price_amount1 with add=False (token1 in)."""
+    return ratio_a + amount / liq
+
+
+def swap_step_col(
+    zero_for_one: bool, top: Column, bottom: Column, amount: Column, liq: Column
+) -> tuple[Column, Column]:
+    """final_amt_out_from_tick as columns: (amt_out, sqrt_price_next). With
+    ``top`` = ``bottom`` = the current sqrt price it is also swapIn's
+    branch A, the swap that stays inside the current tick."""
+    if zero_for_one:
+        nxt = next_price_amount0_col(top, liq, amount)
+        return amount1_delta_col(nxt, top, liq), nxt
+    nxt = next_price_amount1_col(bottom, liq, amount)
+    return amount0_delta_col(nxt, bottom, liq), nxt
