@@ -1286,6 +1286,8 @@ def q_stream_resample(spark, sf):
     pinned in tests/test_streaming.py."""
     import uuid
 
+    from v3_polars_spark.streaming.state_store import drain_available_now
+
     _prep(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf, "events.parquet")
@@ -1309,16 +1311,10 @@ def q_stream_resample(spark, sf):
         .drop("__w")
     )
     qname = f"stream_resample_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        agg.writeStream.format("memory").queryName(qname).outputMode("complete"),
+        120,
     )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
     out = spark.table(qname)
     return out.select(
         _ts_str("bucket_ts", "bucket_str"), "n_events", "max_value", "first_event_id"
@@ -2660,6 +2656,8 @@ def q_stream_dedup(spark, sf):
     dropDuplicatesWithinWatermark variant is pinned in test_streaming."""
     import uuid
 
+    from v3_polars_spark.streaming.state_store import drain_available_now
+
     _prep(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf, "events.parquet")
@@ -2673,16 +2671,10 @@ def q_stream_dedup(spark, sf):
         ["user_id", "event_type"]
     )
     qname = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup.writeStream.format("memory")
-        .queryName(qname)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        dedup.writeStream.format("memory").queryName(qname).outputMode("append"),
+        120,
     )
-    q.awaitTermination(120)
-    if q.isActive:
-        q.stop()
     return spark.table(qname)
 
 

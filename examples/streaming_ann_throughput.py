@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from v3_polars_spark.session import get_spark, tune_shuffle_partitions
 from v3_polars_spark.streaming import read_ivf_index, seed_ivf_index
 from v3_polars_spark.streaming.ann_stream import ivf_assign_batch_fn
+from v3_polars_spark.streaming.state_store import drain_available_now
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
 N_BATCHES = 8
@@ -72,20 +73,16 @@ def main() -> None:
         fn(df, batch_id)
         walls.append(round(time.time() - t, 2))
 
-    q = (
+    drain_available_now(
         # one micro-batch per segment via distinct mtimes (see the
         # streaming_dedup_throughput note on same-mtime coalescing)
         spark.readStream.schema(emb.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(src, "seg*"))
         .writeStream.foreachBatch(timed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        1800,
     )
-    q.awaitTermination(1800)
-    if q.isActive:
-        q.stop()
 
     _, assigned = read_ivf_index(spark, root)
     index_size = n0

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from v3_polars_spark.session import get_spark, tune_shuffle_partitions
 from v3_polars_spark.streaming import read_corpus, seed_corpus
 from v3_polars_spark.streaming.dedup_stream import corpus_dedup_batch_fn
+from v3_polars_spark.streaming.state_store import drain_available_now
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1z"
 N_BATCHES = 8
@@ -74,7 +75,7 @@ def main() -> None:
         fn(df, batch_id)
         walls.append(round(time.time() - t, 2))
 
-    q = (
+    drain_available_now(
         # maxFilesPerTrigger=1 batches by distinct mtime group — one
         # micro-batch per segment (this Spark build coalesces same-mtime
         # files into one trigger regardless of the file cap)
@@ -82,13 +83,9 @@ def main() -> None:
         .option("maxFilesPerTrigger", "1")
         .parquet(os.path.join(src, "seg*"))
         .writeStream.foreachBatch(timed)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        1800,
     )
-    q.awaitTermination(1800)
-    if q.isActive:
-        q.stop()
 
     kept = read_corpus(spark, root)
     per_batch = {

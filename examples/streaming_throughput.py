@@ -35,7 +35,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from v3_polars_spark.session import get_spark
-    from v3_polars_spark.streaming import streaming_resample
+    from v3_polars_spark.streaming import run_available_now, streaming_resample
     from v3_polars_spark.streaming.quality_stream import (
         read_bin_counts,
         streaming_bin_counts,
@@ -67,13 +67,12 @@ def main() -> None:
         watermark="1 hour",
     )
     t0 = time.perf_counter()
-    q = (
-        agg.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(WORK, "ck_resample"))
-        .trigger(availableNow=True)
-        .start(os.path.join(WORK, "sink_resample"))
+    run_available_now(
+        agg,
+        os.path.join(WORK, "sink_resample"),
+        os.path.join(WORK, "ck_resample"),
+        timeout_sec=3600,
     )
-    q.awaitTermination()
     dt = time.perf_counter() - t0
     out["resample_drain_sec"] = round(dt, 3)
     out["resample_rows_per_s"] = round(n_rows / dt)

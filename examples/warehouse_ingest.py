@@ -21,6 +21,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from v3_polars_spark.session import get_spark
 from v3_polars_spark.sources.pyds import SegmentSinkDataSource, WarehouseDataSource
+from v3_polars_spark.streaming.state_store import drain_available_now
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/reference/v3/data/examples"
 TABLES = ["pool_swap_events", "pool_mint_burn_events", "pool_initialize_events", "factory_pool_created"]
@@ -34,7 +35,7 @@ def main() -> None:
     with tempfile.TemporaryDirectory() as tmp:
         landed = os.path.join(tmp, "landed")
         for table in TABLES:
-            q = (
+            drain_available_now(
                 spark.readStream.format("v3warehouse")
                 .option("provider", "local")
                 .option("path", SRC)
@@ -45,13 +46,9 @@ def main() -> None:
                 .writeStream.format("v3segments")
                 .option("path", landed)
                 .option("table", table)
-                .option("checkpointLocation", os.path.join(tmp, "ckpt", table))
-                .trigger(availableNow=True)
-                .start()
+                .option("checkpointLocation", os.path.join(tmp, "ckpt", table)),
+                180,
             )
-            q.awaitTermination(180)
-            if q.isActive:
-                q.stop()
             n = spark.read.parquet(os.path.join(landed, table)).count()
             print(f"landed {table}: {n} rows")
 

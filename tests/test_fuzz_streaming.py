@@ -16,6 +16,14 @@ oracle). foreachBatch is at-least-once with monotonic batch ids, so a
 crashed batch is always retried with the same id: that is exactly the
 replay the harness performs.
 
+Every family counts the injected crashes that actually fired, and
+``test_fuzz_every_crash_seam_fired`` requires each crash seam to fire
+at least once across the family's seeds. The seams are the names the
+code calls: ``commit_write`` in the trigger bodies' modules,
+``commit_compacted`` in ``upsert_stream``, and
+``state_store.commit_compacted`` for the three compactors, which all
+run inside ``state_store.compact_kind``.
+
 Seed count: SPARK_GRAFT_FUZZ_STREAM_N (default 12 per operator family in
 the suite — a streaming seed costs ~40 s of parquet state churn, two
 orders heavier than a batch-fuzz seed); the committed hunt log runs 500+
@@ -24,6 +32,7 @@ orders heavier than a batch-fuzz seed); the committed hunt log runs 500+
 
 from __future__ import annotations
 
+import collections
 import glob
 import os
 import random
@@ -40,6 +49,7 @@ from v3_polars_spark.streaming import upsert_stream as ups
 from v3_polars_spark.streaming import state_store
 
 N_SEEDS = int(os.environ.get("SPARK_GRAFT_FUZZ_STREAM_N", "12"))
+_BLOCKS = 4  # each family's seeds are split over this many test blocks
 
 _CRASH_MODES = ("before_write", "tmp_no_rename", "after_rename")
 
@@ -57,10 +67,12 @@ class _CrashingCommit:
 
     def __init__(self, real, target: int, mode: str):
         self.real, self.target, self.mode, self.calls = real, target, mode, 0
+        self.crashes = 0
 
     def __call__(self, df, final_dir, *args):
         self.calls += 1
         if self.calls == self.target:
+            self.crashes += 1
             if self.mode == "before_write":
                 raise InjectedCrash(final_dir)
             if self.mode == "tmp_no_rename":
@@ -77,7 +89,9 @@ class _CrashingCommit:
 def _drive(fn, batches, rng, module, commit_names, start_id=0):
     """Run the batch schedule with randomized injections. Every batch is
     ultimately applied (a crashed attempt is retried with the same id —
-    foreachBatch at-least-once); committed batches may also be replayed."""
+    foreachBatch at-least-once); committed batches may also be replayed.
+    Returns the number of injected crashes that fired."""
+    fired = 0
     for bid, df in enumerate(batches, start=start_id):
         action = rng.choice(("normal", "replay", "crash", "crash"))
         if action == "crash":
@@ -93,11 +107,48 @@ def _drive(fn, batches, rng, module, commit_names, start_id=0):
                 pass
             finally:
                 setattr(module, name, real)
+            fired += wrapper.crashes
             fn(df, bid)  # the retry (same id)
         else:
             fn(df, bid)
             if action == "replay":
                 fn(df, bid)  # duplicate delivery of a committed batch
+    return fired
+
+
+def _crashing_compaction(compact, rng) -> int:
+    """Run ``compact()`` with its first covers commit crashing in a random
+    mode, then run it again (the retry path). The compactors commit
+    through ``state_store.commit_compacted``, so that is the seam patched.
+    Returns the number of injected crashes that fired (0 when the
+    compaction had nothing to rewrite)."""
+    real = state_store.commit_compacted
+    wrapper = _CrashingCommit(real, 1, rng.choice(_CRASH_MODES))
+    state_store.commit_compacted = wrapper
+    try:
+        compact()
+    except InjectedCrash:
+        pass
+    finally:
+        state_store.commit_compacted = real
+    compact()  # retry path
+    return wrapper.crashes
+
+
+_SEAMS = {
+    "corpus": ("commit_write", "commit_compacted"),
+    "ivf": ("commit_write", "commit_compacted"),
+    "upsert": ("commit_compacted",),
+    "pack": ("commit_write", "commit_compacted"),
+}
+
+
+@pytest.fixture(scope="module")
+def crash_log():
+    """Injected crashes that fired, ``{family: {block: Counter(seam)}}``;
+    checked by test_fuzz_every_crash_seam_fired once every block of a
+    family has run."""
+    return collections.defaultdict(dict)
 
 
 def _split_batches(rng, items, max_batches=4):
@@ -128,7 +179,9 @@ def _docs(rng, n):
     return rows
 
 
-def _run_dedup_schedule(spark, root, batches_rows, rng, inject, near_self):
+def _run_dedup_schedule(
+    spark, root, batches_rows, rng, inject, near_self, fired=None
+):
     fn = ds.corpus_dedup_batch_fn(
         spark, root, near=near_self, near_self=near_self, num_hashes=8, bands=2
     )
@@ -138,23 +191,15 @@ def _run_dedup_schedule(spark, root, batches_rows, rng, inject, near_self):
     ]
     if inject:
         for bid, df in enumerate(batches):
-            _drive(
+            fired["commit_write"] += _drive(
                 fn, [df], random.Random(rng.random()), ds,
-                ("_commit_write",), start_id=bid,
+                ("commit_write",), start_id=bid,
             )
             if rng.random() < 0.3:
                 # interleave a (possibly crashing) state compaction
-                mode = rng.choice(_CRASH_MODES)
-                real = ds.commit_compacted
-                wrapper = _CrashingCommit(real, 1, mode)
-                ds.commit_compacted = wrapper
-                try:
-                    ds.compact_corpus_state(spark, root)
-                except InjectedCrash:
-                    pass
-                finally:
-                    ds.commit_compacted = real
-                ds.compact_corpus_state(spark, root)  # retry path
+                fired["commit_compacted"] += _crashing_compaction(
+                    lambda: ds.compact_corpus_state(spark, root), rng
+                )
     else:
         for bid, df in enumerate(batches):
             fn(df, bid)
@@ -163,9 +208,10 @@ def _run_dedup_schedule(spark, root, batches_rows, rng, inject, near_self):
     return sorted(r["doc_id"] for r in read_corpus(spark, root).collect())
 
 
-@pytest.mark.parametrize("block", range(4))
-def test_fuzz_corpus_dedup_crash_replay(spark, tmp_path, block):
-    per = -(-N_SEEDS // 4)
+@pytest.mark.parametrize("block", range(_BLOCKS))
+def test_fuzz_corpus_dedup_crash_replay(spark, tmp_path, block, crash_log):
+    per = -(-N_SEEDS // _BLOCKS)
+    fired = collections.Counter()
     for seed in range(block * per, min((block + 1) * per, N_SEEDS)):
         rng = random.Random(1000 + seed)
         rows = _docs(rng, rng.randint(6, 24))
@@ -173,7 +219,7 @@ def test_fuzz_corpus_dedup_crash_replay(spark, tmp_path, block):
         near_self = seed % 3 == 0
         crashed = _run_dedup_schedule(
             spark, str(tmp_path / f"c{seed}"), batches_rows,
-            random.Random(seed), True, near_self,
+            random.Random(seed), True, near_self, fired,
         )
         clean = _run_dedup_schedule(
             spark, str(tmp_path / f"x{seed}"), batches_rows,
@@ -184,6 +230,7 @@ def test_fuzz_corpus_dedup_crash_replay(spark, tmp_path, block):
         assert not glob.glob(str(tmp_path / f"c{seed}" / "*" / ".tmp-*")), seed
         shutil.rmtree(tmp_path / f"c{seed}", ignore_errors=True)
         shutil.rmtree(tmp_path / f"x{seed}", ignore_errors=True)
+    crash_log["corpus"][block] = fired
 
 
 # ---------------------------------------------------------------------------
@@ -198,7 +245,9 @@ def _vecs(rng, n, dim=6):
     ]
 
 
-def _run_ivf_schedule(spark, root, seed_rows, batches_rows, rng, inject):
+def _run_ivf_schedule(
+    spark, root, seed_rows, batches_rows, rng, inject, fired=None
+):
     anns.seed_ivf_index(
         spark.createDataFrame(seed_rows, "vec_id long, embedding array<float>"),
         root,
@@ -215,7 +264,7 @@ def _run_ivf_schedule(spark, root, seed_rows, batches_rows, rng, inject):
     ]
     for bid, df in enumerate(batches):
         if inject and rng.random() < 0.5:
-            _drive(
+            fired["commit_write"] += _drive(
                 fn, [df], random.Random(rng.random()), anns,
                 ("commit_write",), start_id=bid,
             )
@@ -223,17 +272,9 @@ def _run_ivf_schedule(spark, root, seed_rows, batches_rows, rng, inject):
             fn(df, bid)
         # interleave a (possibly crashing) compaction mid-drain
         if inject and rng.random() < 0.4:
-            mode = rng.choice(_CRASH_MODES)
-            real = anns.commit_compacted
-            wrapper = _CrashingCommit(real, 1, mode)
-            anns.commit_compacted = wrapper
-            try:
-                anns.compact_ivf_index(spark, root)
-            except InjectedCrash:
-                pass
-            finally:
-                anns.commit_compacted = real
-            anns.compact_ivf_index(spark, root)  # retry path
+            fired["commit_compacted"] += _crashing_compaction(
+                lambda: anns.compact_ivf_index(spark, root), rng
+            )
         elif rng.random() < 0.2:
             anns.compact_ivf_index(spark, root)
     _, assigned = anns.read_ivf_index(spark, root)
@@ -242,16 +283,17 @@ def _run_ivf_schedule(spark, root, seed_rows, batches_rows, rng, inject):
     )
 
 
-@pytest.mark.parametrize("block", range(4))
-def test_fuzz_ivf_assign_compact_crash_replay(spark, tmp_path, block):
-    per = -(-N_SEEDS // 4)
+@pytest.mark.parametrize("block", range(_BLOCKS))
+def test_fuzz_ivf_assign_compact_crash_replay(spark, tmp_path, block, crash_log):
+    per = -(-N_SEEDS // _BLOCKS)
+    fired = collections.Counter()
     for seed in range(block * per, min((block + 1) * per, N_SEEDS)):
         rng = random.Random(2000 + seed)
         seed_rows = _vecs(rng, rng.randint(4, 10))
         batches_rows = _split_batches(rng, _vecs(rng, rng.randint(4, 16)))
         crashed = _run_ivf_schedule(
             spark, str(tmp_path / f"c{seed}"), seed_rows, batches_rows,
-            random.Random(seed), True,
+            random.Random(seed), True, fired,
         )
         clean = _run_ivf_schedule(
             spark, str(tmp_path / f"x{seed}"), seed_rows, batches_rows,
@@ -260,6 +302,7 @@ def test_fuzz_ivf_assign_compact_crash_replay(spark, tmp_path, block):
         assert crashed == clean, (seed, crashed, clean)
         shutil.rmtree(tmp_path / f"c{seed}", ignore_errors=True)
         shutil.rmtree(tmp_path / f"x{seed}", ignore_errors=True)
+    crash_log["ivf"][block] = fired
 
 
 # ---------------------------------------------------------------------------
@@ -273,9 +316,10 @@ def _events(rng, n_keys, n):
     ]
 
 
-@pytest.mark.parametrize("block", range(4))
-def test_fuzz_snapshot_upsert_crash_replay(spark, tmp_path, block):
-    per = -(-N_SEEDS // 4)
+@pytest.mark.parametrize("block", range(_BLOCKS))
+def test_fuzz_snapshot_upsert_crash_replay(spark, tmp_path, block, crash_log):
+    per = -(-N_SEEDS // _BLOCKS)
+    fired = collections.Counter()
     for seed in range(block * per, min((block + 1) * per, N_SEEDS)):
         rng = random.Random(3000 + seed)
         rows = _events(rng, rng.randint(2, 6), rng.randint(5, 20))
@@ -286,7 +330,9 @@ def test_fuzz_snapshot_upsert_crash_replay(spark, tmp_path, block):
             spark.createDataFrame(b, "k long, seq long, payload string")
             for b in batches_rows
         ]
-        _drive(fn, batches, random.Random(seed), ups, ("commit_compacted",))
+        fired["commit_compacted"] += _drive(
+            fn, batches, random.Random(seed), ups, ("commit_compacted",)
+        )
         got = {
             r["k"]: (r["seq"], r["payload"])
             for r in ups.read_snapshot(spark, root).collect()
@@ -297,6 +343,7 @@ def test_fuzz_snapshot_upsert_crash_replay(spark, tmp_path, block):
                 want[k] = (seq, p)
         assert got == want, (seed, got, want)
         shutil.rmtree(root, ignore_errors=True)
+    crash_log["upsert"][block] = fired
 
 
 # ---------------------------------------------------------------------------
@@ -314,7 +361,7 @@ def _tok_docs(rng, n):
     ]
 
 
-def _run_pack_schedule(spark, root, batches_rows, rng, inject):
+def _run_pack_schedule(spark, root, batches_rows, rng, inject, fired=None):
     from v3_polars_spark.streaming import pack_stream as ps
 
     fn = ps.token_pack_batch_fn(spark, root, max_len=4, sep_token="<s>")
@@ -324,22 +371,14 @@ def _run_pack_schedule(spark, root, batches_rows, rng, inject):
     ]
     if inject:
         for bid, df in enumerate(batches):
-            _drive(
+            fired["commit_write"] += _drive(
                 fn, [df], random.Random(rng.random()), ps,
                 ("commit_write",), start_id=bid,
             )
             if rng.random() < 0.3:
-                mode = rng.choice(_CRASH_MODES)
-                real = ps.commit_compacted
-                wrapper = _CrashingCommit(real, 1, mode)
-                ps.commit_compacted = wrapper
-                try:
-                    ps.compact_packed_shards(spark, root)
-                except InjectedCrash:
-                    pass
-                finally:
-                    ps.commit_compacted = real
-                ps.compact_packed_shards(spark, root)  # retry path
+                fired["commit_compacted"] += _crashing_compaction(
+                    lambda: ps.compact_packed_shards(spark, root), rng
+                )
     else:
         for bid, df in enumerate(batches):
             fn(df, bid)
@@ -352,16 +391,17 @@ def _run_pack_schedule(spark, root, batches_rows, rng, inject):
     return shards, read_pack_carry(spark, root)
 
 
-@pytest.mark.parametrize("block", range(4))
-def test_fuzz_token_pack_crash_replay(spark, tmp_path, block):
-    per = -(-N_SEEDS // 4)
+@pytest.mark.parametrize("block", range(_BLOCKS))
+def test_fuzz_token_pack_crash_replay(spark, tmp_path, block, crash_log):
+    per = -(-N_SEEDS // _BLOCKS)
+    fired = collections.Counter()
     for seed in range(block * per, min((block + 1) * per, N_SEEDS)):
         rng = random.Random(4000 + seed)
         rows = _tok_docs(rng, rng.randint(4, 16))
         batches_rows = _split_batches(rng, rows)
         crashed = _run_pack_schedule(
             spark, str(tmp_path / f"p{seed}"), batches_rows,
-            random.Random(seed), True,
+            random.Random(seed), True, fired,
         )
         clean = _run_pack_schedule(
             spark, str(tmp_path / f"q{seed}"), batches_rows,
@@ -382,3 +422,23 @@ def test_fuzz_token_pack_crash_replay(spark, tmp_path, block):
         assert not glob.glob(str(tmp_path / f"p{seed}" / "*" / ".tmp-*")), seed
         shutil.rmtree(tmp_path / f"p{seed}", ignore_errors=True)
         shutil.rmtree(tmp_path / f"q{seed}", ignore_errors=True)
+    crash_log["pack"][block] = fired
+
+
+def test_fuzz_every_crash_seam_fired(crash_log):
+    """Every crash seam of every fuzz family above fired at least one
+    injected crash across the family's seeds. A patch on a name the code
+    no longer calls intercepts nothing, and the family would then pass
+    without testing a single crash window. Runs after the families (file
+    order); a family whose blocks did not all run is not checked."""
+    checked = 0
+    for family, seams in _SEAMS.items():
+        blocks = crash_log.get(family, {})
+        if len(blocks) < _BLOCKS:
+            continue
+        total = sum(blocks.values(), collections.Counter())
+        print(f"{family}: injected crashes fired {dict(total)}")
+        assert all(total[s] > 0 for s in seams), (family, dict(total))
+        checked += 1
+    if not checked:
+        pytest.skip("no fuzz family ran all of its blocks")

@@ -1015,9 +1015,8 @@ def test_corpus_dedup_half_written_state_cleaned_on_replay(spark, tmp_path):
     import shutil
 
     from v3_polars_spark.streaming import read_corpus, streaming_corpus_dedup
-    from v3_polars_spark.streaming.dedup_stream import (
-        _BUCKETS, _FP, _SHSETS, _batch_dir,
-    )
+    from v3_polars_spark.streaming.dedup_stream import _BUCKETS, _FP, _SHSETS
+    from v3_polars_spark.streaming.state_store import batch_dir
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -1027,7 +1026,7 @@ def test_corpus_dedup_half_written_state_cleaned_on_replay(spark, tmp_path):
 
     # forge the half-written batch-1 attempt: stale state, no docs
     for kind in (_FP, _BUCKETS, _SHSETS):
-        shutil.copytree(_batch_dir(root, kind, 0), _batch_dir(root, kind, 1))
+        shutil.copytree(batch_dir(root, kind, 0), batch_dir(root, kind, 1))
 
     _cd_write_segs(spark, src, _CD_SEGS[1:], start=1)
     streaming_corpus_dedup(_cd_reader(spark, src), root, ckpt)
@@ -1048,9 +1047,8 @@ def test_corpus_dedup_midwrite_tmp_dirs_invisible_and_swept(spark, tmp_path):
     import shutil
 
     from v3_polars_spark.streaming import read_corpus, streaming_corpus_dedup
-    from v3_polars_spark.streaming.dedup_stream import (
-        _DOCS, _FP, _batch_dir,
-    )
+    from v3_polars_spark.streaming.dedup_stream import _DOCS, _FP
+    from v3_polars_spark.streaming.state_store import batch_dir
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -1068,7 +1066,7 @@ def test_corpus_dedup_midwrite_tmp_dirs_invisible_and_swept(spark, tmp_path):
     b1 = spark.createDataFrame(_CD_SEGS[1], _CD_SCHEMA)
     own_fp = fingerprint_md5(dedup_exact(b1), "text").select("fp").distinct()
     for kind, df in ((_FP, own_fp), (_DOCS, b1)):
-        final = _batch_dir(root, kind, 1)
+        final = batch_dir(root, kind, 1)
         tmp = os.path.join(
             os.path.dirname(final), ".tmp-" + os.path.basename(final) + "-deadbeef"
         )
@@ -1684,11 +1682,8 @@ def test_compact_corpus_state_skips_uncommitted_orphan_state(spark, tmp_path):
         read_corpus,
         streaming_corpus_dedup,
     )
-    from v3_polars_spark.streaming.dedup_stream import (
-        _FP,
-        _batch_dir,
-        _commit_write,
-    )
+    from v3_polars_spark.streaming.dedup_stream import _FP
+    from v3_polars_spark.streaming.state_store import batch_dir, commit_write
 
     src = str(tmp_path / "src")
     os.makedirs(src)
@@ -1699,12 +1694,12 @@ def test_compact_corpus_state_skips_uncommitted_orphan_state(spark, tmp_path):
     # forge the crash: batch 3's fp state committed, docs never landed —
     # its fingerprint is doc 9's text, which SHOULD survive batch 3
     orphan = spark.createDataFrame([("deadbeef" * 4,)], "fp string")
-    _commit_write(orphan, _batch_dir(root, _FP, 3))
+    commit_write(orphan, batch_dir(root, _FP, 3))
 
     stats = compact_corpus_state(spark, root, exclude_newest=False)
     # the orphan was not a compaction source and still sits where the
     # replay's cleanup expects it
-    assert os.path.isdir(_batch_dir(root, _FP, 3))
+    assert os.path.isdir(batch_dir(root, _FP, 3))
     fp_dirs = sorted(
         os.path.basename(d)
         for d in __import__("glob").glob(os.path.join(root, _FP, "batch=*"))

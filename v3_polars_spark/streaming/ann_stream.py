@@ -33,9 +33,7 @@ decision is a policy knob, not an operator concern.
 
 from __future__ import annotations
 
-import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,12 +41,11 @@ from pyspark.sql import functions as F
 from ..datapipe.similarity import ivf_assign, ivf_build
 from .state_store import (
     batch_dir,
-    batch_id_of,
-    commit_compacted,
+    begin_trigger,
     commit_write,
+    compact_kind,
     data_dirs,
-    gc_covered,
-    tmp_glob,
+    drain_available_now,
 )
 
 _CENTROIDS = "centroids"
@@ -186,47 +183,16 @@ def compact_ivf_index(
        GC; a crash before it leaves only invisible garbage the next
        compaction sweeps).
 
+    The newest trigger (highest id >= 0 over every committed dir, with
+    or without data) is excluded by default: it is the one batch the
+    checkpoint may not have acknowledged, and its dir is the replay's
+    exactly-once marker (see ``state_store.compaction_sources``).
+
     Probe results are identical pre/post (assignment rows are merely
     re-filed); the ``batch`` provenance column coarsens to the
     generation id. Run ONE compactor at a time (trivially true from a
     maintenance job); the drain itself is not paused.
     """
-    # retry path: reclaim anything a crashed earlier compaction left
-    gc_covered(index_root, _ASSIGNED)
-    for leftover in glob.glob(os.path.join(index_root, _ASSIGNED, ".tmp-*")):
-        shutil.rmtree(leftover, ignore_errors=True)
-
-    adirs = data_dirs(index_root, _ASSIGNED)
-    files_before = sum(
-        len(glob.glob(os.path.join(d, "part-*"))) for d in adirs
-    )
-    # By default NEVER compact the newest trigger segment: it is the one
-    # batch the checkpoint may not have acknowledged yet. If its dir were
-    # covered and reclaimed, a restart would replay that batch, find no
-    # commit marker, and re-commit its assignments — duplicating every
-    # vector the compacted segment already holds. Excluding max(trigger
-    # id) keeps the exactly-once marker intact for the only at-risk
-    # batch; it joins the next compaction once a newer trigger supersedes
-    # it. ``exclude_newest=False`` is for callers that KNOW the drain is
-    # quiesced (AvailableNow terminated and acknowledged).
-    trig_ids = [batch_id_of(d) for d in adirs if batch_id_of(d) >= 0]
-    if exclude_newest and trig_ids:
-        newest = max(trig_ids)
-        adirs = [d for d in adirs if batch_id_of(d) != newest]
-    if len(adirs) <= 1:
-        return {
-            "compacted": False,
-            "segments_before": len(adirs),
-            "segments_after": len(adirs),
-            "files_before": files_before,
-            "files_after": files_before,
-        }
-    ids = [batch_id_of(d) for d in adirs]
-    gen = min(-1, *ids) - 1
-    df = spark.read.option(
-        "basePath", os.path.join(index_root, _ASSIGNED)
-    ).parquet(*adirs)
-    n = df.count()
     # Right-sized, not MINIMAL: probe-side parallelism comes from the file
     # count (the candidate re-rank join inherits the scan's partitioning,
     # and a sub-128MB parquet file is one task). Collapsing a small index
@@ -237,28 +203,24 @@ def compact_ivf_index(
     # dozen core-aligned ones. At real index sizes rows/target dominates
     # and the floor is inert. Tiny indexes (< ~4k rows/core) still shrink
     # below core count: scheduling beats scan width there.
-    floor = min(
-        spark.sparkContext.defaultParallelism, max(1, -(-n // 4_000))
+    stats, rewrite = compact_kind(
+        spark, index_root, _ASSIGNED, target_rows_per_file, exclude_newest,
+        layout=lambda df, n: df.repartitionByRange(
+            n, F.col("cluster_id"), F.col(id_col)
+        ),
+        rows_per_core=4_000,
     )
-    n_files = max(-(-n // int(target_rows_per_file)), floor)
-    out = df.drop("batch").repartitionByRange(
-        n_files, F.col("cluster_id"), F.col(id_col)
-    )
-    commit_compacted(out, batch_dir(index_root, _ASSIGNED, gen), ids)
-    gc_covered(index_root, _ASSIGNED)
-    after_dirs = data_dirs(index_root, _ASSIGNED)
-    files_after = sum(
-        len(glob.glob(os.path.join(d, "part-*"))) for d in after_dirs
-    )
-    return {
-        "compacted": True,
-        "segments_before": len(adirs),
-        "segments_after": len(after_dirs),
-        "files_before": files_before,
-        "files_after": files_after,
-        "rows": n,
-        "generation": gen,
+    out = {
+        "compacted": rewrite is not None,
+        "segments_before": stats["dirs_before"],
+        "segments_after": stats["dirs_before"],
+        "files_before": stats["files_before"],
+        "files_after": stats["files_after"],
     }
+    if rewrite is not None:
+        out["segments_after"] = len(data_dirs(index_root, _ASSIGNED))
+        out["rows"], out["generation"] = rewrite
+    return out
 
 
 def ivf_assign_batch_fn(
@@ -274,10 +236,8 @@ def ivf_assign_batch_fn(
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         nonlocal centroids
         out_dir = batch_dir(index_root, _ASSIGNED, batch_id)
-        if os.path.isdir(out_dir):
+        if begin_trigger(out_dir):
             return  # replay of a committed batch: exactly-once no-op
-        for leftover in glob.glob(tmp_glob(out_dir)):
-            shutil.rmtree(leftover, ignore_errors=True)
         if centroids is None:
             centroids = spark.read.parquet(
                 batch_dir(index_root, _CENTROIDS, -1)
@@ -306,12 +266,9 @@ def streaming_ivf_assign(
     fn = ivf_assign_batch_fn(
         stream_df.sparkSession, index_root, id_col=id_col, vec_col=vec_col
     )
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", checkpoint_path
+        ),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()

@@ -52,7 +52,6 @@ representative.
 
 from __future__ import annotations
 
-import glob
 import os
 import shutil
 
@@ -69,19 +68,20 @@ from ..datapipe.dedup import (
 )
 from .state_store import (
     batch_dir,
-    batch_id_of,
-    commit_compacted,
+    begin_trigger,
     commit_write,
+    committed_ids,
+    compact_kind,
     data_dirs,
-    gc_covered,
+    drain_available_now,
     read_state,
-    tmp_glob,
+    sweep_tmp,
 )
 
 # The commit protocol (atomic tmp-rename per-batch dirs, dot-prefixed tmp
-# namespace, replay sweep) lives in streaming/state_store.py — shared with
-# the other foreachBatch state maintainers; the _-prefixed aliases below
-# are kept because this module's tests and docs reference them.
+# namespace, replay sweep, compaction skeleton) lives in
+# streaming/state_store.py — shared with the other foreachBatch state
+# maintainers.
 
 # corpus_root subdirectories: kept documents + the three state tables a
 # later batch needs to dedup against the corpus without re-reading it
@@ -91,30 +91,10 @@ _BUCKETS = "state_buckets"
 _SHSETS = "state_shsets"
 
 
-def _batch_dir(corpus_root: str, kind: str, batch_id: int) -> str:
-    return batch_dir(corpus_root, kind, batch_id)
-
-
-def _tmp_glob(final_dir: str) -> str:
-    return tmp_glob(final_dir)
-
-
-def _commit_write(df: DataFrame, final_dir: str) -> None:
-    commit_write(df, final_dir)
-
-
-def _data_dirs(corpus_root: str, kind: str) -> list[str]:
-    return data_dirs(corpus_root, kind)
-
-
-def _read_state(spark, corpus_root: str, kind: str, like: DataFrame) -> DataFrame:
-    return read_state(spark, corpus_root, kind, like)
-
-
 def read_corpus(spark, corpus_root: str) -> DataFrame:
     """The kept corpus: every committed batch's surviving docs, with the
     ``batch`` provenance partition column (seed batches are negative)."""
-    dirs = _data_dirs(corpus_root, _DOCS)
+    dirs = data_dirs(corpus_root, _DOCS)
     if not dirs:
         raise FileNotFoundError(f"no committed corpus batches under {corpus_root}")
     base = os.path.join(corpus_root, _DOCS)
@@ -130,10 +110,11 @@ def compact_corpus_state(
     """Rewrite each state kind's accumulated per-trigger dirs (docs,
     fingerprints, buckets, shingle sets) into right-sized segments — the
     corpus twin of ``ann_stream.compact_ivf_index``, on the same covers-
-    manifest protocol: after thousands of triggers, EVERY batch probes a
-    state union of thousands of tiny parquet files, so the per-trigger
-    cost silently grows with trigger count (file listing + footer reads),
-    not batch size. Compaction restores O(state bytes) reads.
+    manifest protocol (``state_store.compact_kind``): after thousands of
+    triggers, EVERY batch probes a state union of thousands of tiny
+    parquet files, so the per-trigger cost silently grows with trigger
+    count (file listing + footer reads), not batch size. Compaction
+    restores O(state bytes) reads.
 
     Same safety rules as the IVF compactor: the newest trigger's dirs are
     excluded by default (its docs dir is the exactly-once commit marker —
@@ -145,8 +126,6 @@ def compact_corpus_state(
     the next compaction's retry path reclaims. Run one compactor at a
     time; the drain itself is not paused. Returns per-kind (dirs_before,
     files_before, files_after)."""
-    import glob as _glob
-
     # committed = the docs dir EXISTS (docs rename is the batch commit
     # point; an empty dir is still the marker). A crashed attempt can
     # leave state dirs (fp/buckets/shsets) for a batch whose docs never
@@ -156,65 +135,14 @@ def compact_corpus_state(
     # that was never kept). Sources are therefore restricted to ids with
     # a docs marker, plus prior compacted generations (id < -1, which by
     # construction hold only previously-committed data).
-    docs_ids = {
-        batch_id_of(d)
-        for d in _glob.glob(os.path.join(corpus_root, _DOCS, "batch=*"))
+    docs_ids = committed_ids(corpus_root, _DOCS)
+    return {
+        kind: compact_kind(
+            spark, corpus_root, kind, target_rows_per_file, exclude_newest,
+            keep=lambda bid: bid < -1 or bid in docs_ids, marker=_DOCS,
+        )[0]
+        for kind in (_DOCS, _FP, _BUCKETS, _SHSETS)
     }
-    trig = [i for i in docs_ids if i >= 0]
-    skip = {max(trig)} if (exclude_newest and trig) else set()
-    out: dict = {}
-    for kind in (_DOCS, _FP, _BUCKETS, _SHSETS):
-        gc_covered(corpus_root, kind)
-        for leftover in _glob.glob(os.path.join(corpus_root, kind, ".tmp-*")):
-            shutil.rmtree(leftover, ignore_errors=True)
-        dirs = [
-            d
-            for d in data_dirs(corpus_root, kind)
-            if batch_id_of(d) not in skip
-            and (batch_id_of(d) < -1 or batch_id_of(d) in docs_ids)
-        ]
-        files_before = sum(
-            len(_glob.glob(os.path.join(d, "part-*"))) for d in dirs
-        )
-        if len(dirs) <= 1:
-            out[kind] = {
-                "dirs_before": len(dirs),
-                "files_before": files_before,
-                "files_after": files_before,
-            }
-            continue
-        ids = [batch_id_of(d) for d in dirs]
-        gen = min(-1, *ids) - 1
-        if kind == _DOCS:
-            # docs are read with the batch provenance partition column —
-            # strip it before re-filing (provenance coarsens to the
-            # generation id, as in the IVF compactor)
-            df = spark.read.option(
-                "basePath", os.path.join(corpus_root, _DOCS)
-            ).parquet(*dirs).drop("batch")
-        else:
-            df = spark.read.parquet(*dirs)
-        n = df.count()
-        floor = min(
-            spark.sparkContext.defaultParallelism, max(1, -(-n // 50_000))
-        )
-        n_files = max(-(-n // int(target_rows_per_file)), floor)
-        commit_compacted(
-            df.repartition(n_files),
-            batch_dir(corpus_root, kind, gen),
-            ids,
-        )
-        gc_covered(corpus_root, kind)
-        files_after = sum(
-            len(_glob.glob(os.path.join(d, "part-*")))
-            for d in data_dirs(corpus_root, kind)
-        )
-        out[kind] = {
-            "dirs_before": len(dirs),
-            "files_before": files_before,
-            "files_after": files_after,
-        }
-    return out
 
 
 def seed_corpus(
@@ -235,16 +163,16 @@ def seed_corpus(
     params must match the ones passed to :func:`streaming_corpus_dedup`
     or buckets are not comparable across sides."""
     sets = shingle_hash_sets(df, text_col, id_col, n)
-    _commit_write(
+    commit_write(
         fingerprint_md5(df, text_col).select("fp").distinct(),
-        _batch_dir(corpus_root, _FP, batch_id),
+        batch_dir(corpus_root, _FP, batch_id),
     )
-    _commit_write(sets, _batch_dir(corpus_root, _SHSETS, batch_id))
-    _commit_write(
+    commit_write(sets, batch_dir(corpus_root, _SHSETS, batch_id))
+    commit_write(
         _band_buckets(sets, id_col, num_hashes, bands),
-        _batch_dir(corpus_root, _BUCKETS, batch_id),
+        batch_dir(corpus_root, _BUCKETS, batch_id),
     )
-    _commit_write(df, _batch_dir(corpus_root, _DOCS, batch_id))
+    commit_write(df, batch_dir(corpus_root, _DOCS, batch_id))
 
 
 def corpus_dedup_batch_fn(
@@ -268,20 +196,16 @@ def corpus_dedup_batch_fn(
         raise ValueError("near_self=True requires near=True")
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        docs_dir = _batch_dir(corpus_root, _DOCS, batch_id)
-        if os.path.isdir(docs_dir):
+        docs_dir = batch_dir(corpus_root, _DOCS, batch_id)
+        if begin_trigger(docs_dir):
             return  # replay of a committed batch: exactly-once no-op
         # a half-written attempt may have committed state dirs but not
-        # docs (docs rename is the commit point) — remove and recompute;
-        # also sweep any tmp dirs the dead attempt left mid-write (they
-        # are outside the batch=* namespace so readers never saw them,
-        # but replay must not accrete garbage)
-        for kind in (_FP, _BUCKETS, _SHSETS, _DOCS):
-            stale = _batch_dir(corpus_root, kind, batch_id)
-            if kind != _DOCS and os.path.isdir(stale):
-                shutil.rmtree(stale)
-            for leftover in glob.glob(_tmp_glob(stale)):
-                shutil.rmtree(leftover, ignore_errors=True)
+        # docs (docs rename is the commit point) — remove and recompute,
+        # and sweep the tmp dirs the dead attempt left mid-write
+        for kind in (_FP, _BUCKETS, _SHSETS):
+            stale = batch_dir(corpus_root, kind, batch_id)
+            shutil.rmtree(stale, ignore_errors=True)
+            sweep_tmp(stale)
 
         # 1-2. exact self-dedup, then exact cross vs resting state.
         # NOT `s1 anti-join ref_fp`: a left_anti can only broadcast its
@@ -291,7 +215,7 @@ def corpus_dedup_batch_fn(
         # corpus state is SCANNED, never shuffled), then anti-join the
         # matched set — bounded by batch size — back onto the batch.
         s1 = fingerprint_md5(dedup_exact(batch_df, text_col, id_col), text_col)
-        ref_fp = _read_state(spark, corpus_root, _FP, s1.select("fp"))
+        ref_fp = read_state(spark, corpus_root, _FP, s1.select("fp"))
         matched_fp = ref_fp.join(
             F.broadcast(s1.select("fp").distinct()), ["fp"], "left_semi"
         )
@@ -324,8 +248,8 @@ def corpus_dedup_batch_fn(
                 matched = near_match_ids(
                     sets_new,
                     bk_new,
-                    _read_state(spark, corpus_root, _SHSETS, sets_new),
-                    _read_state(spark, corpus_root, _BUCKETS, bk_new),
+                    read_state(spark, corpus_root, _SHSETS, sets_new),
+                    read_state(spark, corpus_root, _BUCKETS, bk_new),
                     id_col=id_col,
                     verify_threshold=verify_threshold,
                     # micro-batch side is bounded by trigger sizing; the
@@ -336,19 +260,19 @@ def corpus_dedup_batch_fn(
             survivors = survivors.persist()
 
             # 4. state first, docs LAST (docs dir is the commit marker)
-            _commit_write(
+            commit_write(
                 survivors.select("fp").distinct(),
-                _batch_dir(corpus_root, _FP, batch_id),
+                batch_dir(corpus_root, _FP, batch_id),
             )
             if near:
                 keep_ids = survivors.select(id_col)
                 sets_kept = sets_new.join(keep_ids, [id_col], "left_semi")
-                _commit_write(sets_kept, _batch_dir(corpus_root, _SHSETS, batch_id))
-                _commit_write(
+                commit_write(sets_kept, batch_dir(corpus_root, _SHSETS, batch_id))
+                commit_write(
                     _band_buckets(sets_kept, id_col, num_hashes, bands),
-                    _batch_dir(corpus_root, _BUCKETS, batch_id),
+                    batch_dir(corpus_root, _BUCKETS, batch_id),
                 )
-            _commit_write(survivors.drop("fp"), docs_dir)
+            commit_write(survivors.drop("fp"), docs_dir)
         finally:
             s2.unpersist()
             if base is not None and base is not s2:
@@ -393,12 +317,9 @@ def streaming_corpus_dedup(
         bands=bands,
         verify_threshold=verify_threshold,
     )
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", checkpoint_path
+        ),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from .. import tables as T
 from ..ops.resample import duration_to_interval
+from .state_store import drain_available_now
 
 
 def stream_table(
@@ -97,18 +98,15 @@ def run_available_now(
     """Drain everything currently available (Trigger.AvailableNow) into a
     parquet sink, then stop. Checkpointed: re-running skips already-
     processed segments — the streaming twin of the ingest loop's
-    resume-from-max-landed-block."""
-    q = (
+    resume-from-max-landed-block. A drain still running after
+    ``timeout_sec`` is stopped and raises ``TimeoutError``."""
+    drain_available_now(
         stream_df.writeStream.format("parquet")
         .option("path", sink_path)
         .option("checkpointLocation", checkpoint_path)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
+        .outputMode(output_mode),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
 
 
 def stream_dedup_exact(

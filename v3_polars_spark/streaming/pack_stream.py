@@ -28,29 +28,30 @@ order (pinned in tests for in-order splits, any schedule).
 
 ``compact_packed_shards`` rewrites accumulated per-trigger dirs into
 right-sized segments on the shared covers-manifest protocol
-(``state_store.commit_compacted``); stale carry rows (only the newest
-batch's carry is live, and the newest batch is excluded) are dropped at
-compaction.
+(``state_store.compact_kind``); stale carry rows are dropped at
+compaction and the live carry per key is kept.
 
 Upstream tokenization composes freely: ``datapipe.bpe.bpe_encode``'s
 expression path is stateless, so ``bpe_encode(readStream(...), merges)``
 feeds this packer without any extra state.
 
 **Shard-keyed mode** (``by=`` — the 100 TB posture, mirroring
-``pack_sequences(by=...)``): without a shard key every trigger ranks the
-batch with a GLOBAL ``row_number()`` window, so one task materializes
-every token array in the batch before the pack redistributes — fine for
-the oracle-scale stream, a single-task bottleneck at cluster scale.
-With ``by=<col>`` the rank window, the pack layout, the sequence
-numbering, and the CARRY are all per shard: each shard is an
-independent packed stream ``(shard, seq, tokens)`` and every stage runs
-width-parallel. Carry state is one row PER LIVE SHARD, carried forward
-in every trigger commit (so the newest trigger dir always holds the
-full carry set — the O(1) fast path needs no store scan); the shard key
-must therefore be a BOUNDED partition label (hash bucket, source tag,
-tenant id — never a row id). Fallback carry recovery stays
-provenance-free per shard: (seq, n_tokens) is monotone within a shard
-for the same reason it is globally.
+``pack_sequences(by=...)``): the two modes run ONE trigger body and
+differ only in the key columns — none, or ``shard`` — that partition
+the rank window, the pack layout, the sequence offsets and the carry.
+Without a shard key every trigger ranks the batch with a GLOBAL
+``row_number()`` window, so one task materializes every token array in
+the batch before the pack redistributes — fine for the oracle-scale
+stream, a single-task bottleneck at cluster scale. With ``by=<col>``
+each shard is an independent packed stream ``(shard, seq, tokens)`` and
+every stage runs width-parallel. Carry state is one row PER KEY (one
+row for the global stream, one per live shard), carried forward in
+every trigger commit (so the newest trigger dir always holds the full
+carry set — the O(1) fast path needs no store scan); the shard key must
+therefore be a BOUNDED partition label (hash bucket, source tag, tenant
+id — never a row id). Fallback carry recovery stays provenance-free per
+key: (seq, n_tokens) is monotone within a shard for the same reason it
+is globally.
 
 Measured crossover (BENCH_NOTES "shard-keyed packer trigger-size
 scaling", sf1, doubling triggers 31k→281k docs): ``by=`` is ~2x
@@ -58,7 +59,7 @@ cheaper per trigger at every size with only 5 shards, and its per-doc
 cost falls monotonically as triggers grow (206 → 123 us/doc) while the
 global mode keeps a single-task rank/pack premium (417 → 157 us/doc).
 Guidance: the global mode is fine at oracle/test scale (its rank task
-is small and the code path is simpler); from ~10^4 docs per trigger,
+is small; both modes share one code path); from ~10^4 docs per trigger,
 or whenever a bounded shard label exists anyway, use ``by=`` — never
 slower in the measured range, advantage widens with trigger size and
 shard count.
@@ -68,7 +69,6 @@ from __future__ import annotations
 
 import glob
 import os
-import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -77,11 +77,11 @@ from pyspark.sql import types as T
 from .state_store import (
     batch_dir,
     batch_id_of,
-    commit_compacted,
+    begin_trigger,
     commit_write,
+    compact_kind,
     data_dirs,
-    gc_covered,
-    tmp_glob,
+    drain_available_now,
 )
 
 _PACKED = "packed"
@@ -97,9 +97,8 @@ _SCHEMA = T.StructType(
 
 # shard-keyed stores prepend the shard label (cast to string — the
 # canonical partition-label type; the key is a bounded label, not data)
-_SCHEMA_BY = T.StructType(
-    [T.StructField("shard", T.StringType())] + list(_SCHEMA.fields)
-)
+_SHARD = T.StructField("shard", T.StringType())
+_SCHEMA_BY = T.StructType([_SHARD] + list(_SCHEMA.fields))
 
 
 def read_packed_shards(spark, pack_root: str, sharded: bool = False) -> DataFrame:
@@ -137,58 +136,48 @@ def _newest_carry_dirs(pack_root: str) -> list[str]:
     )
 
 
-def read_pack_carry(spark, pack_root: str) -> tuple[int, list[str]]:
-    """The live carry: (next sequence index, remainder tokens).
-
-    Fast path: mid-drain, the newest trigger dir (every commit carries
-    exactly one carry row) is read alone — O(1) per trigger regardless
-    of store size. Fallback (no trigger dirs left, e.g. after a full
-    ``exclude_newest=False`` compaction of a quiesced drain): scan the
-    committed store for carry rows. Selection there is provenance-free —
-    across triggers the carry's ``(seq, n_tokens)`` is monotonically
+def _live_carries(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The live carry row per key (one row for the global stream): the
+    max by ``(seq, n_tokens)``. Selection is provenance-free — across
+    triggers a key's carry ``(seq, n_tokens)`` is monotonically
     nondecreasing (a trigger either closes sequences, seq strictly
-    grows, or extends the remainder in place), so the LIVE carry is the
-    max by that key."""
+    grows, or extends the remainder in place)."""
+    w = Window.partitionBy(*keys).orderBy(F.desc("seq"), F.desc("n_tokens"))
+    return (
+        rows.filter(F.col("is_carry"))
+        .withColumn("__rk", F.row_number().over(w))
+        .filter(F.col("__rk") == 1)
+        .drop("__rk")
+    )
+
+
+def _read_carries(spark, pack_root: str, keys: list[str]) -> dict:
+    """``{key tuple: (next seq index, remainder tokens)}`` — the key
+    tuple is ``()`` for the global stream, ``(shard,)`` when keyed.
+
+    Fast path: mid-drain, the newest trigger dir alone — every trigger
+    commits the FULL live carry set (untouched shards carried forward),
+    so this is O(#keys) per trigger regardless of store size. Fallback
+    (no trigger dirs left, e.g. after a full ``exclude_newest=False``
+    compaction of a quiesced drain): the live carries of the committed
+    store."""
     dirs = _newest_carry_dirs(pack_root)
     if not dirs:
-        return 0, []
-    rows = (
-        spark.read.parquet(*dirs)
-        .filter(F.col("is_carry"))
-        .orderBy(F.desc("seq"), F.desc("n_tokens"))
-        .limit(1)
-        .collect()
-    )
-    if not rows:  # no trigger has committed yet
-        return 0, []
-    r = rows[0]
-    return int(r.seq), list(r.tokens)
+        return {}
+    rows = _live_carries(spark.read.parquet(*dirs), keys).collect()
+    return {tuple(r[k] for k in keys): (int(r.seq), list(r.tokens)) for r in rows}
+
+
+def read_pack_carry(spark, pack_root: str) -> tuple[int, list[str]]:
+    """The live carry of the global stream: (next sequence index,
+    remainder tokens); ``(0, [])`` before the first trigger commits."""
+    return _read_carries(spark, pack_root, []).get((), (0, []))
 
 
 def read_pack_carries(spark, pack_root: str) -> dict[str, tuple[int, list[str]]]:
     """Live carries of a SHARD-KEYED store: ``{shard: (next seq index,
-    remainder tokens)}``.
-
-    Fast path: the newest trigger dir alone — every trigger commits the
-    FULL live carry set (untouched shards carried forward), so this is
-    O(#shards) per trigger regardless of store size. Fallback (no
-    trigger dirs, e.g. after a full compaction): scan committed carry
-    rows and take the per-shard max by (seq, n_tokens) — monotone
-    within a shard for the same reason the global carry is."""
-    dirs = _newest_carry_dirs(pack_root)
-    if not dirs:
-        return {}
-    w = Window.partitionBy("shard").orderBy(
-        F.desc("seq"), F.desc("n_tokens")
-    )
-    rows = (
-        spark.read.parquet(*dirs)
-        .filter(F.col("is_carry"))
-        .withColumn("__rk", F.row_number().over(w))
-        .filter(F.col("__rk") == 1)
-        .collect()
-    )
-    return {r.shard: (int(r.seq), list(r.tokens)) for r in rows}
+    remainder tokens)}`` (one carry row per live shard)."""
+    return {k[0]: v for k, v in _read_carries(spark, pack_root, ["shard"]).items()}
 
 
 def token_pack_batch_fn(
@@ -204,131 +193,55 @@ def token_pack_batch_fn(
     runs — exposed so tests can wrap it with failure injection.
     ``by=<col>`` switches to the shard-keyed layout (see module
     docstring): per-shard rank window, per-shard sequence numbering,
-    one carry row per live shard."""
-    from ..datapipe.sampling import pack_sequences
+    one carry row per live shard.
 
-    if by is not None:
-        return _token_pack_batch_fn_by(
-            spark, pack_root, max_len, by,
-            id_col=id_col, tokens_col=tokens_col, sep_token=sep_token,
-        )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        out_dir = batch_dir(pack_root, _PACKED, batch_id)
-        if os.path.isdir(out_dir):
-            return  # replay of a committed batch: exactly-once no-op
-        for leftover in glob.glob(tmp_glob(out_dir)):
-            shutil.rmtree(leftover, ignore_errors=True)
-
-        seq0, rem = read_pack_carry(spark, pack_root)
-
-        toks = F.col(tokens_col)
-        if sep_token is not None:
-            toks = F.concat(toks, F.array(F.lit(sep_token)))
-        ranked = batch_df.select(
-            F.row_number()
-            .over(Window.orderBy(id_col))
-            .cast("long")
-            .alias("__rk"),
-            toks.alias("__toks"),
-        )
-        rem_row = spark.createDataFrame(
-            [(0, rem)],
-            T.StructType(
-                [
-                    T.StructField("__rk", T.LongType()),
-                    T.StructField("__toks", T.ArrayType(T.StringType())),
-                ]
-            ),
-        )
-        allr = rem_row.unionByName(ranked)
-        packed = pack_sequences(allr, "__toks", ["__rk"], max_len).select(
-            (F.col("seq") + F.lit(seq0)).alias("seq"),
-            F.col("tokens"),
-            F.col("n_tokens"),
-        )
-        # the carry offset is always a max_len boundary, so the number of
-        # FULL sequences this trigger closes is total // max_len
-        n_total = len(rem) + int(
-            ranked.agg(
-                F.coalesce(F.sum(F.size("__toks")), F.lit(0))
-            ).collect()[0][0]
-        )
-        next_seq0 = seq0 + n_total // max_len
-        full = packed.filter(F.col("seq") < F.lit(next_seq0)).withColumn(
-            "is_carry", F.lit(False)
-        )
-        tail = packed.filter(F.col("seq") >= F.lit(next_seq0)).collect()
-        new_rem = list(tail[0].tokens) if tail else []
-        carry_row = spark.createDataFrame(
-            [(next_seq0, new_rem, len(new_rem), True)], _SCHEMA
-        )
-        commit_write(full.unionByName(carry_row), out_dir)
-
-    return _apply
-
-
-def _token_pack_batch_fn_by(
-    spark,
-    pack_root: str,
-    max_len: int,
-    by: str,
-    id_col: str = "doc_id",
-    tokens_col: str = "bpe_tokens",
-    sep_token: str | None = None,
-):
-    """Shard-keyed trigger body: every stage — rank window, pack
-    layout, sequence numbering, carry — is per shard, so no single
-    task ever holds the whole trigger. Driver state per trigger is
-    O(#live shards): the per-shard token totals (a bounded collect) and
-    the <max_len-token tails.
+    One trigger body serves both modes; they differ only in the key
+    columns (none, or ``shard``) that partition the rank window, the
+    pack layout, the offsets and the carry — so no single task ever
+    holds a shard-keyed trigger. Driver state per trigger is O(#keys):
+    the per-key token totals (a bounded collect) and the <max_len-token
+    tails.
 
     The trigger runs THREE actions (totals collect, data write, tails
     collect); the ranked projection is persisted so all three see ONE
     materialization of the row_number ranks — without it, duplicate
-    ``id_col`` values within a shard could tie-break differently across
+    ``id_col`` values within a key could tie-break differently across
     recomputations and commit a carry inconsistent with the written
     sequences (token loss/duplication). ``id_col`` should still be
-    unique per shard, as for the global path: ranks of genuinely tied
-    ids are pinned by the persist here, but cross-TRIGGER arrival order
-    of tied ids is inherently undefined."""
+    unique per key: ranks of genuinely tied ids are pinned by the
+    persist here, but cross-TRIGGER arrival order of tied ids is
+    inherently undefined."""
     from ..datapipe.sampling import pack_sequences
+
+    keys = [] if by is None else ["shard"]
+    key_fields = [_SHARD] if by is not None else []
+    key_cols = [F.col(by).cast("string").alias("shard")] if by is not None else []
+    schema = _SCHEMA_BY if by is not None else _SCHEMA
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         out_dir = batch_dir(pack_root, _PACKED, batch_id)
-        if os.path.isdir(out_dir):
+        if begin_trigger(out_dir):
             return  # replay of a committed batch: exactly-once no-op
-        for leftover in glob.glob(tmp_glob(out_dir)):
-            shutil.rmtree(leftover, ignore_errors=True)
 
-        carries = read_pack_carries(spark, pack_root)
+        carries = _read_carries(spark, pack_root, keys)
 
         toks = F.col(tokens_col)
         if sep_token is not None:
             toks = F.concat(toks, F.array(F.lit(sep_token)))
-        w = Window.partitionBy("shard").orderBy(id_col)
-        ranked = (
-            batch_df.select(
-                F.col(by).cast("string").alias("shard"),
-                F.col(id_col),
-                toks.alias("__toks"),
-            )
-            .select(
-                "shard",
-                F.row_number().over(w).cast("long").alias("__rk"),
-                "__toks",
-            )
+        w = Window.partitionBy(*keys).orderBy(id_col)
+        ranked = batch_df.select(
+            *key_cols, F.col(id_col), toks.alias("__toks")
+        ).select(
+            *keys, F.row_number().over(w).cast("long").alias("__rk"), "__toks"
         )
         rem_schema = T.StructType(
-            [
-                T.StructField("shard", T.StringType()),
+            key_fields
+            + [
                 T.StructField("__rk", T.LongType()),
                 T.StructField("__toks", T.ArrayType(T.StringType())),
             ]
         )
-        rem_rows = [
-            (shard, 0, rem) for shard, (_s0, rem) in carries.items() if rem
-        ]
+        rem_rows = [(*k, 0, rem) for k, (_s0, rem) in carries.items() if rem]
         allr = (
             spark.createDataFrame(rem_rows, rem_schema)
             .unionByName(ranked)
@@ -336,64 +249,58 @@ def _token_pack_batch_fn_by(
         )
 
         try:
-            # per-shard token totals: bounded collect (#shards rows), fixes
-            # how many FULL sequences each shard closes this trigger
+            # per-key token totals: bounded collect (#keys rows), fixes how
+            # many FULL sequences each key closes this trigger (the carry
+            # offset is always a max_len boundary). Without keys this is a
+            # global aggregate: one row even for an empty trigger, so the
+            # global stream always commits its carry row.
             totals = {
-                r.shard: int(r.n)
-                for r in allr.groupBy("shard")
+                tuple(r[k] for k in keys): int(r.n)
+                for r in allr.groupBy(*keys)
                 .agg(F.coalesce(F.sum(F.size("__toks")), F.lit(0)).alias("n"))
                 .collect()
             }
             offs = [
-                (
-                    shard,
-                    carries.get(shard, (0, []))[0],
-                    totals[shard] // max_len,
-                )
-                for shard in totals
+                (*k, carries.get(k, (0, []))[0], n // max_len)
+                for k, n in totals.items()
             ]
             offs_schema = T.StructType(
-                [
-                    T.StructField("shard", T.StringType()),
+                key_fields
+                + [
                     T.StructField("__seq0", T.LongType()),
                     T.StructField("__nfull", T.LongType()),
                 ]
             )
-            packed = (
-                pack_sequences(allr, "__toks", ["__rk"], max_len, by=["shard"])
-                .join(
-                    F.broadcast(spark.createDataFrame(offs, offs_schema)),
-                    "shard",
-                )
+            packed = pack_sequences(
+                allr, "__toks", ["__rk"], max_len, by=keys
+            ).join(  # no keys: the one-row offsets frame joins every row
+                F.broadcast(spark.createDataFrame(offs, offs_schema)), keys or None
             )
             full = packed.filter(F.col("seq") < F.col("__nfull")).select(
-                "shard",
+                *keys,
                 (F.col("seq") + F.col("__seq0")).alias("seq"),
                 "tokens",
                 "n_tokens",
                 F.lit(False).alias("is_carry"),
             )
             tails = {
-                r.shard: list(r.tokens)
+                tuple(r[k] for k in keys): list(r.tokens)
                 for r in packed.filter(F.col("seq") >= F.col("__nfull")).collect()
             }
-            # carry set = every shard this trigger touched, at its new state,
-            # plus every untouched live shard carried forward unchanged
+            # carry set = every key this trigger touched, at its new state,
+            # plus every untouched live key carried forward unchanged
             new_carries = {
-                shard: (
-                    carries.get(shard, (0, []))[0] + totals[shard] // max_len,
-                    tails.get(shard, []),
-                )
-                for shard in totals
+                k: (carries.get(k, (0, []))[0] + n // max_len, tails.get(k, []))
+                for k, n in totals.items()
             }
-            for shard, state in carries.items():
-                new_carries.setdefault(shard, state)
+            for k, state in carries.items():
+                new_carries.setdefault(k, state)
             carry_rows = spark.createDataFrame(
                 [
-                    (shard, s0, rem, len(rem), True)
-                    for shard, (s0, rem) in sorted(new_carries.items())
+                    (*k, s0, rem, len(rem), True)
+                    for k, (s0, rem) in sorted(new_carries.items())
                 ],
-                _SCHEMA_BY,
+                schema,
             )
             commit_write(full.unionByName(carry_rows), out_dir)
         finally:
@@ -428,15 +335,12 @@ def streaming_token_shards(
         sep_token=sep_token,
         by=by,
     )
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", checkpoint_path
+        ),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
 
 
 def compact_packed_shards(
@@ -446,70 +350,24 @@ def compact_packed_shards(
     exclude_newest: bool = True,
 ) -> dict:
     """Rewrite accumulated per-trigger shard dirs into right-sized
-    segments (covers-manifest protocol — one rename publishes the
-    compacted segment and retires its sources; crash-safe bottom-up GC).
-    Stale carry rows are dropped; the LIVE carry (max by (seq,
-    n_tokens) — see :func:`read_pack_carry`) is preserved in the
+    segments (covers-manifest protocol, ``state_store.compact_kind`` —
+    one rename publishes the compacted segment and retires its sources;
+    crash-safe bottom-up GC). Stale carry rows are dropped; the LIVE
+    carry per key (max by (seq, n_tokens) — one row for the global
+    stream, one per shard for a ``by=``-keyed store) is preserved in the
     compacted segment, so a resume works even after a full
     ``exclude_newest=False`` compaction of a quiesced drain. The newest
     trigger is excluded by default, exactly like the corpus/IVF
     compactors (its dir is the exactly-once replay marker). Run one
     compactor at a time; the drain itself is not paused."""
-    gc_covered(pack_root, _PACKED)
-    for leftover in glob.glob(os.path.join(pack_root, _PACKED, ".tmp-*")):
-        shutil.rmtree(leftover, ignore_errors=True)
-    trig_ids = [
-        batch_id_of(d)
-        for d in glob.glob(os.path.join(pack_root, _PACKED, "batch=*"))
-        if batch_id_of(d) >= 0
-    ]
-    skip = {max(trig_ids)} if (exclude_newest and trig_ids) else set()
-    dirs = [
-        d for d in data_dirs(pack_root, _PACKED) if batch_id_of(d) not in skip
-    ]
-    files_before = sum(len(glob.glob(os.path.join(d, "part-*"))) for d in dirs)
-    stats = {
-        "dirs_before": len(dirs),
-        "files_before": files_before,
-        "files_after": files_before,
-    }
-    if len(dirs) <= 1:
-        return stats
-    allrows = spark.read.parquet(*dirs)
-    if "shard" in allrows.columns:
-        # shard-keyed store: one live carry PER SHARD (max by the same
-        # monotone (seq, n_tokens) key, per shard)
-        w = Window.partitionBy("shard").orderBy(
-            F.desc("seq"), F.desc("n_tokens")
+
+    def _select(rows: DataFrame) -> DataFrame:
+        keys = ["shard"] if "shard" in rows.columns else []
+        return rows.filter(~F.col("is_carry")).unionByName(
+            _live_carries(rows, keys)
         )
-        live_carry = (
-            allrows.filter(F.col("is_carry"))
-            .withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .drop("__rk")
-        )
-    else:
-        live_carry = (
-            allrows.filter(F.col("is_carry"))
-            .orderBy(F.desc("seq"), F.desc("n_tokens"))
-            .limit(1)
-        )
-    df = allrows.filter(~F.col("is_carry")).unionByName(live_carry)
-    n = df.count()
-    if n == 0:
-        return stats
-    ids = [batch_id_of(d) for d in dirs]
-    gen = min(-1, *ids) - 1
-    floor = min(
-        spark.sparkContext.defaultParallelism, max(1, -(-n // 50_000))
-    )
-    n_files = max(-(-n // int(target_rows_per_file)), floor)
-    commit_compacted(
-        df.repartition(n_files), batch_dir(pack_root, _PACKED, gen), ids
-    )
-    gc_covered(pack_root, _PACKED)
-    stats["files_after"] = sum(
-        len(glob.glob(os.path.join(d, "part-*")))
-        for d in data_dirs(pack_root, _PACKED)
-    )
-    return stats
+
+    return compact_kind(
+        spark, pack_root, _PACKED, target_rows_per_file, exclude_newest,
+        select=_select,
+    )[0]

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..ops.drift import bin_counts
+from .state_store import drain_available_now
 
 
 def _write_batch_state(df: DataFrame, batch_id: int, state_path: str) -> None:
@@ -79,15 +80,12 @@ def streaming_bin_counts(
     def _batch(df: DataFrame, batch_id: int) -> None:
         _write_batch_state(bin_counts(df, col, lo, hi, n_bins), batch_id, state_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(_batch).option(
+            "checkpointLocation", checkpoint_path
+        ),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
 
 
 def read_bin_counts(spark: SparkSession, state_path: str) -> DataFrame:
@@ -120,15 +118,12 @@ def streaming_kll_state(
     def _batch(df: DataFrame, batch_id: int) -> None:
         _write_batch_state(kll_sketches(df, col, [], k=k), batch_id, state_path)
 
-    q = (
-        stream_df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(_batch).option(
+            "checkpointLocation", checkpoint_path
+        ),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()
 
 
 def read_kll_quantiles(

@@ -27,10 +27,6 @@ tests/test_streaming.py and fuzzed in tests/test_fuzz_streaming.py.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 from pyspark.sql import DataFrame
 
 from ..ops.dedup import dedup_last
@@ -38,10 +34,11 @@ from ..ops.merge import merge_upsert
 from .state_store import (
     batch_dir,
     batch_id_of,
+    begin_trigger,
     commit_compacted,
     data_dirs,
+    drain_available_now,
     gc_covered,
-    tmp_glob,
 )
 
 _SNAP = "snapshot"
@@ -67,13 +64,11 @@ def snapshot_upsert_batch_fn(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         out_dir = batch_dir(snapshot_root, _SNAP, batch_id)
-        if os.path.isdir(out_dir):
+        if begin_trigger(out_dir):
             return  # replay of a committed version: exactly-once no-op
         # retry path: reclaim versions a crashed attempt covered but never
-        # GC'd, and sweep its dead tmp dirs
+        # GC'd
         gc_covered(snapshot_root, _SNAP)
-        for leftover in glob.glob(tmp_glob(out_dir)):
-            shutil.rmtree(leftover, ignore_errors=True)
         latest = dedup_last(batch_df, keys=keys, order=order)
         prior_dirs = data_dirs(snapshot_root, _SNAP)
         if prior_dirs:
@@ -109,12 +104,9 @@ def streaming_snapshot_upsert(
     fn = snapshot_upsert_batch_fn(
         stream_df.sparkSession, snapshot_path, keys=keys, order=order
     )
-    q = (
-        stream_df.writeStream.foreachBatch(fn)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    drain_available_now(
+        stream_df.writeStream.foreachBatch(fn).option(
+            "checkpointLocation", checkpoint_path
+        ),
+        timeout_sec,
     )
-    q.awaitTermination(timeout_sec)
-    if q.isActive:
-        q.stop()

@@ -323,22 +323,10 @@ def write_zorder(
     x tenant, day x user, tick x timestamp). One global min/max aggregate
     for the bounds, one range partitioning by the interleaved key, one
     in-partition sort; files then carry tight per-dimension stats
-    (pruning factor pinned in tests/test_zorder.py).
+    (pruning factor pinned in tests/test_zorder.py). The no-partition
+    case of :func:`write_partitioned_zorder`.
     """
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"__mn_{c}"), F.max(c).alias(f"__mx_{c}")]
-    row = df.agg(*aggs).first()
-    bounds = {c: (row[f"__mn_{c}"], row[f"__mx_{c}"]) for c in cols}
-    z = zorder_key(cols, bounds, bits=bits)
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(num_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    write_partitioned_zorder(df, path, [], cols, num_files=num_files, bits=bits)
 
 
 def write_partitioned_zorder(
@@ -363,7 +351,8 @@ def write_partitioned_zorder(
     partition directories.
 
     ``num_files`` is the TOTAL write-task count across all partitions —
-    scale it with data volume exactly like ``write_zorder``.
+    scale it with data volume exactly like ``write_zorder``. With no
+    ``partition_by`` this IS ``write_zorder``: one flat directory.
     """
     aggs = []
     for c in cols:
