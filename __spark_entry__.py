@@ -346,18 +346,21 @@ def _values_df(spark: SparkSession, rows, cols) -> DataFrame:
     return spark.sql(f"SELECT * FROM (VALUES {body}) AS t({','.join(cols)})")
 
 
-def _ref_swap_depth(spark: SparkSession) -> DataFrame:
-    """swap_depth(swap_frame, irv, token0-in) — the one-row cumulative-
-    depth array the quote path bisects, cached per session exactly like
-    the reference caches its createSwapDF arrays per as_of."""
+def _ref_swap_depth(spark: SparkSession) -> list:
+    """swap_depth(collected swap frame, irv, token0-in) — the cumulative-
+    depth array the quote path bisects, folded on the driver once per
+    session exactly like the reference caches its createSwapDF arrays per
+    as_of."""
     from v3_polars_spark.v3.swap import InRangeValues, swap_depth
 
     return _session_memo(
         spark,
         ("__ref_swap_depth__",),
         lambda: swap_depth(
-            _ref_swap_frame(spark), InRangeValues(**_QL_IRV), token_in_is_token1=False
-        ).localCheckpoint(),
+            [r.asDict() for r in _ref_swap_frame(spark).collect()],
+            InRangeValues(**_QL_IRV),
+            token_in_is_token1=False,
+        ),
     )
 
 
@@ -1187,11 +1190,11 @@ _QL_AMOUNTS = [1e21, 1e22, 5e22, 1e23, 1e30]  # branch A, three Bs, insufficient
 
 
 def q_quote_ladder(spark, sf):
-    """Batched swapIn (quote_ladder): the W5 first-covering search as a
-    forward as-of join on cumulative depth, swap math as column
-    expressions. In-range values are the golden literals (SURVEY §8.3) so
-    the oracle can replay the identical constants; outputs log-rounded
-    because pow() differs across engines in the last ulp."""
+    """Batched swapIn (quote_ladder): the W5 first-covering search as an
+    array bisect over the literal cumulative-depth array, swap math as
+    column expressions. In-range values are the golden literals (SURVEY
+    §8.3) so the oracle can replay the identical constants; outputs
+    log-rounded because pow() differs across engines in the last ulp."""
     from v3_polars_spark.v3.swap import InRangeValues, quote_ladder
 
     out = quote_ladder(
@@ -3464,7 +3467,7 @@ def _quote_ladder_ctes() -> str:
     """The shared DuckDB CTE chain for the quote-ladder oracles: swap frame
     from the reference example data, direction-ordered cumulative depth,
     the covering-tick search as min_by over cum_in >= axis (== the Spark
-    forward as-of join), branch/sufficiency math with the identical golden
+    array bisect), branch/sufficiency math with the identical golden
     literals."""
     sp = repr(_QL_IRV["sqrt_p"])
     irt = repr(_QL_IRV["in_range0"])

@@ -1,5 +1,8 @@
+import contextlib
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -25,3 +28,27 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def ref_examples():
     return REF_EXAMPLES
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    """A context manager that counts the Spark jobs started inside it:
+    ``with count_jobs() as jobs: df.collect()`` leaves the count in
+    ``jobs.n``. The block runs under a fresh job group, read back from the
+    status tracker once the listener bus has delivered every job event."""
+
+    @contextlib.contextmanager
+    def count():
+        sc = spark.sparkContext
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        jobs = types.SimpleNamespace(n=0)
+        sc.setJobGroup(group, "count_jobs")
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs.n = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

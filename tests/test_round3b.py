@@ -285,8 +285,10 @@ def test_tune_shuffle_partitions_scale_invariant(spark):
 
     before = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        # bench-sized input: floors at the cache split width
-        assert tune_shuffle_partitions(spark, 40 * 1024 * 1024) == 8
+        # bench-sized input: floors at the cache split width, 8 splits
+        # capped at the core count
+        floor = min(8, spark.sparkContext.defaultParallelism)
+        assert tune_shuffle_partitions(spark, 40 * 1024 * 1024) == floor
         # 100 TB input: the same rule yields cluster-scale partition counts
         parts = tune_shuffle_partitions(spark, 100 * 1024**4)
         assert parts == (100 * 1024**4 * 4) // (64 * 1024 * 1024)

@@ -6,8 +6,10 @@ whose sums stay below 2**53, so every liquidity comparison is exact; the
 swap comparisons are bit-exact against the scalar ``Pool.swap_in`` loop.
 """
 
+import datetime as dt
 import importlib.util
 import os
+import shutil
 import sys
 
 import pytest
@@ -210,3 +212,137 @@ def test_pool_quote_ladder_reuses_memo_frame(spark, gen, monkeypatch):
     adf = spark.createDataFrame([(0, 1e6)], "quote_id long, amount_in double")
     assert pool.quote_ladder(as_of, pool.token0, adf).count() == 1
     assert built == []
+
+
+@pytest.mark.parametrize("fees", [False, True])
+def test_pool_quote_ladder_is_one_job_without_join(spark, gen, count_jobs, fees):
+    """With the swap frame in the memo, a ladder is one narrow projection:
+    its depth array is a literal, so the plan has no join and one job."""
+    _, _, as_of, pools = gen
+    pool = next(iter(pools.values()))
+    pool.calc_swap_df(as_of)
+    adf = spark.createDataFrame(list(enumerate(AMOUNTS)), "quote_id long, amount_in double")
+    q = pool.quote_ladder(as_of, pool.token1, adf, fees=fees)
+    with count_jobs() as jobs:
+        assert len(q.collect()) == len(AMOUNTS)
+    assert jobs.n == 1
+    plan = q._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "Window" not in plan and "Exchange" not in plan
+
+
+def test_quote_in_direction_with_empty_depth(spark, gen):
+    """A direction with no tick beyond the in-range one folds to an empty
+    depth array: branch A still prices, and a branch-B amount reads
+    sufficient=false where the scalar path asserts."""
+    from v3_polars_spark.v3.swap import quote_ladder, swap_depth, swap_in
+
+    _, _, as_of, pools = gen
+    pool = next(iter(pools.values()))
+    rows, irv = pool.calc_swap_df(as_of)
+    above = [r for r in rows if r["tick_a"] >= irv.tick]  # nothing below: token0-in is dry
+    assert swap_depth(above, irv, token_in_is_token1=False) == []
+    assert swap_depth(above, irv, token_in_is_token1=True) == swap_depth(rows, irv, True)
+    small, big = irv.in_range0 / 10, irv.in_range0 * 10
+    adf = spark.createDataFrame([(0, small), (1, big)], "quote_id long, amount_in double")
+    got = {
+        r["quote_id"]: r
+        for r in quote_ladder(above, irv, False, adf, pool.fee, fees=True).collect()
+    }
+    out, (spl, _, fee_dict) = swap_in(above, irv, False, small, pool.fee, fees=True)
+    _check_quote(got[0], (out, spl, fee_dict), fees=True)
+    assert got[1]["branch"] == "B" and got[1]["sufficient"] is False
+    assert got[1]["amt_out"] is None and got[1]["fees"] is None
+    with pytest.raises(AssertionError, match="Not enough liquidity"):
+        swap_in(above, irv, False, big, pool.fee)
+
+
+def _fresh_series(spark, data, pool, start, every, gas):
+    """price_series over a fresh read of the raw chain swap table, both
+    inputs cut at ``start`` before the dedups: the same rows, from a plan
+    that shares no subtree with (so never reads) the Pool's cached clocks."""
+    from v3_polars_spark import tables as T
+    from v3_polars_spark.v3 import price_series
+
+    chain = T.tenant_filter(T.read_table(spark, data, "pool_swap_events"), pool.chain)
+    since = F.col("block_timestamp") >= F.lit(start)
+    return price_series(chain.filter(since), pool.swaps.filter(since), start, every, gas)
+
+
+def _rows(df):
+    return sorted(df.collect(), key=lambda r: r["block_timestamp"])
+
+
+@pytest.mark.parametrize("every", ["1h", "6h", "1d"])
+def test_pool_price_series_matches_uncached_composition(spark, gen, every):
+    """The cached clocks give the rows of the uncached composition, with
+    gas off and on, from a start inside, before and after the swaps."""
+    gp = _gen_pool()
+    _, data, _, pools = gen
+    pool = next(iter(pools.values()))
+    starts = {gp.GENESIS + dt.timedelta(hours=2): True}
+    if every == "6h":  # before the first swap, after the last
+        day = dt.timedelta(days=1)
+        starts |= {gp.GENESIS - day: True, gp.GENESIS + 30 * day: False}
+    for start, any_rows in starts.items():
+        for gas in (False, True):
+            got = _rows(pool.get_price_series(start, every, gas))
+            assert got == _rows(_fresh_series(spark, data, pool, start, every, gas))
+            assert bool(got) is any_rows
+
+
+def test_pool_price_series_repeat_call_jobs(spark, gen, count_jobs):
+    gp = _gen_pool()
+    _, _, _, pools = gen
+    pool = list(pools.values())[1]
+    start = gp.GENESIS + dt.timedelta(hours=1)
+    pool.get_price_series(start, "6h").collect()
+    with count_jobs() as jobs:
+        pool.get_price_series(start + dt.timedelta(hours=1), "6h").collect()
+    assert jobs.n <= 4
+
+
+def test_pool_price_series_sees_append(spark, gen, tmp_path):
+    """An appended raw swap segment changes the table's fingerprint: the
+    next call rebuilds the block clock, shows the new rows and unpersists
+    the clock it replaced; a Pool whose first call comes after the append
+    sees them too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from v3_polars_spark.v3 import Pool
+
+    gp = _gen_pool()
+    _, data, _, pools = gen
+    addr = next(iter(pools))
+    copy = str(tmp_path / "data")
+    shutil.copytree(data, copy)
+    pool = Pool(spark, addr, gp.CHAIN, copy)
+    late = Pool(spark, list(pools)[1], gp.CHAIN, copy)  # first call after the append
+    start = gp.GENESIS
+    before = _rows(pool.get_price_series(start, "1h"))
+    old_clock = pool._block_clock[1]
+
+    # a later segment: another pool's first swaps moved 20 h (6,000 blocks) on
+    swaps = pq.read_table(os.path.join(copy, "pool_swap_events", "part-0.parquet"))
+    seg = swaps.to_pandas()
+    seg = seg[seg["address"] != addr].head(5)
+    seg["block_number"] += 6_000
+    seg["block_timestamp"] += dt.timedelta(hours=20)
+    pq.write_table(
+        pa.Table.from_pandas(seg, schema=swaps.schema, preserve_index=False),
+        os.path.join(copy, "pool_swap_events", "part-1.parquet"),
+    )
+    newest = int(seg["block_number"].max())
+
+    # the chain clock cached before the append is never served to another Pool
+    assert max(r["block_number"] for r in late.get_price_series(start, "1h").collect()) == newest
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    after = _rows(pool.get_price_series(start, "1h"))
+    # replaced, not kept: the new clock shares the one `late` cached for
+    # the same listing, and the old one's data is released
+    assert not old_clock.is_cached and pool._block_clock[1].is_cached
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted - 1
+    assert after == _rows(_fresh_series(spark, copy, pool, start, "1h", False))
+    assert max(r["block_number"] for r in after) == newest
+    assert len(after) > len(before) and after[: len(before)] == before

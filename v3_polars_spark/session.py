@@ -122,9 +122,11 @@ def tune_shuffle_partitions(
     partitions a 1000-executor cluster needs; at bench SF (tens of MB) it
     yields the floor — a fixed count is wrong in both directions (tiny
     tasks whose scheduling dominates sub-second queries, or giant spilling
-    tasks at scale). Floor = the working-set cache's split width (8), so
-    reduce stages are never narrower than the cached map stages feeding
-    them. AQE still adapts per-stage on top of this static default.
+    tasks at scale). Floor = the working-set cache's split width,
+    ``min(8, defaultParallelism)`` (the cache is split 8 ways at
+    interactive sizes but never wider than the core count), so reduce
+    stages are never narrower than the cached map stages feeding them.
+    AQE still adapts per-stage on top of this static default.
 
     Session-wide side effects: both ``spark.sql.shuffle.partitions`` and
     ``spark.sql.files.maxPartitionBytes`` are set on the session, so later

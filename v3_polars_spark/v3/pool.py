@@ -12,15 +12,18 @@ Differences by design (Spark-first):
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from .. import tables as T
 from ..ops import asof_lookup_scalar
 from . import swap_math as sm
 from .liquidity import liquidity_distribution
 from .series import bn_at_date as _bn_at_date
-from .series import price_series as _price_series
+from .series import block_clock, clock_series, tick_clock
 from .swap import InRangeValues, in_range_values, quote_ladder, swap_frame, swap_in
 
 
@@ -84,6 +87,8 @@ class Pool:
 
         self._swaps: DataFrame | None = None
         self._mb: DataFrame | None = None
+        self._tick_clock: DataFrame | None = None
+        self._block_clock: tuple[str, DataFrame] | None = None  # (fingerprint, clock)
         self.max_supported = -1
         if pull:
             s, m = self.swaps, self.mb
@@ -110,10 +115,6 @@ class Pool:
         of silently serving pre-append state forever. Spark's file index
         ignores underscore-prefixed files, so the extra marker never
         pollutes the parquet read."""
-        import posixpath
-
-        from .. import fsutil
-
         if self.save_path is None:
             return build()
         loc = posixpath.join(self.save_path, self.chain, self.pool, table)
@@ -217,7 +218,7 @@ class Pool:
         sdf = swap_frame(self.create_liq(as_of), self.ts)
         rows = [r.asDict() for r in sdf.collect()]  # O(#ticks) — driver idiom
         irv = in_range_values(rows, float(price), self.ts)
-        self._cache.update({"as_of": as_of, "swap_df": sdf, "swap_rows": rows, "irv": irv})
+        self._cache.update({"as_of": as_of, "swap_rows": rows, "irv": irv})
         return rows, irv
 
     def swap_in(self, calldata: dict):
@@ -250,13 +251,14 @@ class Pool:
         fees: bool = False,
     ) -> DataFrame:
         """Batched swapIn: quote every amount in ``amounts`` at one as_of in
-        a single distributed plan (forward as-of join on cumulative depth).
-        Bit-identical to looping swap_in; ``fees=True`` adds the per-tick
-        fee attribution array (scalar fee_dict parity); see
+        a single narrow plan, against the swap-frame rows ``calc_swap_df``
+        already holds for that as_of (its depth array enters the plan as a
+        literal). Bit-identical to looping swap_in; ``fees=True`` adds the
+        per-tick fee attribution array (scalar fee_dict parity); see
         swap.quote_ladder."""
-        _, irv = self.calc_swap_df(as_of)
+        rows, irv = self.calc_swap_df(as_of)
         return quote_ladder(
-            self._cache["swap_df"],
+            rows,
             irv,
             token_in_is_token1=(token_in.lower() == self.token1),
             amounts=amounts,
@@ -267,10 +269,33 @@ class Pool:
 
     # series ----------------------------------------------------------------
     def get_price_series(self, start_time, frequency: str = "6h", gas: bool = False) -> DataFrame:
-        chain_swaps = T.tenant_filter(
-            T.read_table(self.spark, self.data_path, "pool_swap_events"), self.chain
+        """getPriceSeries (reference pool_helpers.py:134-204) from two cached
+        clocks (series.block_clock / tick_clock), so a call scans no raw
+        table. The tick clock is this pool's, built from ``swaps`` and kept
+        as long as they are. The block clock is chain-wide, built from the
+        raw swap table and kept under that directory's listing fingerprint
+        (fsutil.dir_fingerprint — names/sizes/mtimes, no data scan): an
+        append to the table shows on the next call, which rebuilds the
+        clock and unpersists the one it replaces."""
+        raw_dir = posixpath.join(self.data_path, "pool_swap_events")
+        current = fsutil.dir_fingerprint(self.spark, raw_dir)
+        if self._block_clock is None or self._block_clock[0] != current:
+            if self._block_clock is not None:
+                self._block_clock[1].unpersist()
+            chain_swaps = T.tenant_filter(
+                T.read_table(self.spark, self.data_path, "pool_swap_events"), self.chain
+            )
+            # Spark's cache matches plans, not file listings: the no-op
+            # fingerprint filter keeps a clock cached under an older listing
+            # (another Pool's) from being served for this one, while Pools
+            # that see the same listing share one cached clock
+            listed = chain_swaps.filter(F.lit(current).isNotNull())
+            self._block_clock = (current, block_clock(listed).cache())
+        if self._tick_clock is None:
+            self._tick_clock = tick_clock(self.swaps).cache()
+        return clock_series(
+            self._block_clock[1], self._tick_clock, start_time, frequency, gas
         )
-        return _price_series(chain_swaps, self.swaps, start_time, frequency, gas)
 
     def get_bn_at_date(self, dt) -> int | None:
         return _bn_at_date(self.swaps, dt)

@@ -3,7 +3,10 @@
 Reference: v3/helpers/pool_helpers.py:134-204 (getPriceSeries),
 v3/helpers/pool_helpers.py:44-60 (dtToBN). Composite pipeline:
 distinct (A7) -> deterministic dedup-last (A2) -> tumbling-bucket agg (A3,
-with median gas A6) -> forward fill (W3) -> as-of join (J2).
+with median gas A6) -> forward fill (W3) -> as-of join (J2). The first two
+steps build one "clock" per side — ``block_clock`` (chain) and
+``tick_clock`` (pool), one row per block timestamp — that do not depend on
+``start_time``, so a session can cache them; ``clock_series`` is the rest.
 
 Parity notes:
 - `bn_series` is CHAIN-wide (not pool-filtered) while `tick_series` is
@@ -25,38 +28,43 @@ from ..ops import asof_join, dedup_last, ffill, resample
 _TIEBREAK = ["block_number", "transaction_index", "log_index"]
 
 
-def bn_series(swaps: DataFrame, start_time, every: str) -> DataFrame:
-    """Latest block number per time bucket (reference pool_helpers.py:136-151).
-    Input: chain-filtered swaps (NOT pool-filtered — Q4)."""
-    df = (
-        swaps.filter(F.col("block_timestamp") >= F.lit(start_time))
-        .select("block_timestamp", "block_number")
-        .distinct()
+def block_clock(swaps: DataFrame) -> DataFrame:
+    """The chain's block clock: latest block number per block timestamp
+    (reference pool_helpers.py:136-146, the distinct -> last part of its
+    bn series). Input: chain-filtered swaps (NOT pool-filtered — Q4)."""
+    df = swaps.select("block_timestamp", "block_number").distinct()
+    return dedup_last(df, keys=["block_timestamp"], order=["block_number"])
+
+
+def tick_clock(swaps: DataFrame) -> DataFrame:
+    """ONE pool's tick clock: its last swap per block timestamp
+    (reference pool_helpers.py:153-175) with tick, gas_price and gas_used,
+    plus the tiebreak columns that pin the last swap of a bucket. Carries
+    the gas columns either way, so one clock serves ``gas`` off and on.
+    Caller pre-filters chain+address."""
+    gas = [F.col(c).cast("double").alias(c) for c in ("gas_price", "gas_used")]
+    df = swaps.select(
+        "block_timestamp", F.col("tick").cast("long").alias("tick"), *gas, *_TIEBREAK
     )
-    df = dedup_last(df, keys=["block_timestamp"], order=["block_number"])
+    return dedup_last(df, keys=["block_timestamp"], order=_TIEBREAK)
+
+
+def _since(clock: DataFrame, start_time) -> DataFrame:
+    # on the dedup key, so it commutes with the clock's dedup (and Catalyst
+    # still pushes it into the scan of an uncached clock)
+    return clock.filter(F.col("block_timestamp") >= F.lit(start_time))
+
+
+def _bn_buckets(blocks: DataFrame, start_time, every: str) -> DataFrame:
     return resample(
-        df,
+        _since(blocks, start_time),
         "block_timestamp",
         every,
         [F.max("block_number").alias("block_number")],
     )
 
 
-def tick_series(swaps: DataFrame, start_time, every: str, gas: bool = False) -> DataFrame:
-    """Last tick (and median gas) per time bucket for ONE pool
-    (reference pool_helpers.py:153-201). Caller pre-filters chain+address."""
-    cols = ["block_timestamp", "tick"] + (["gas_price", "gas_used"] if gas else [])
-    df = (
-        swaps.filter(F.col("block_timestamp") >= F.lit(start_time))
-        .select(*cols, *_TIEBREAK)
-        .withColumn("tick", F.col("tick").cast("long"))
-    )
-    if gas:
-        df = df.withColumn("gas_price", F.col("gas_price").cast("double")).withColumn(
-            "gas_used", F.col("gas_used").cast("double")
-        )
-    df = dedup_last(df, keys=["block_timestamp"], order=_TIEBREAK)
-
+def _tick_buckets(ticks: DataFrame, start_time, every: str, gas: bool) -> DataFrame:
     # "last tick in bucket" needs an order — max_by over the tiebreak
     ord_struct = F.struct(*[F.col(c) for c in _TIEBREAK])
     aggs = [F.max_by(F.col("tick"), ord_struct).alias("tick")]
@@ -65,10 +73,36 @@ def tick_series(swaps: DataFrame, start_time, every: str, gas: bool = False) -> 
             F.percentile(F.col("gas_price"), F.lit(0.5)).alias("gas_price"),
             F.percentile(F.col("gas_used"), F.lit(0.5)).alias("gas_used"),
         ]
-    out = resample(df, "block_timestamp", every, aggs)
+    out = resample(_since(ticks, start_time), "block_timestamp", every, aggs)
     if gas:
         out = ffill(out, ["gas_price", "gas_used", "tick"], order=["bucket_ts"])
     return out
+
+
+def bn_series(swaps: DataFrame, start_time, every: str) -> DataFrame:
+    """Latest block number per time bucket (reference pool_helpers.py:136-151).
+    Input: chain-filtered swaps (NOT pool-filtered — Q4)."""
+    return _bn_buckets(block_clock(swaps), start_time, every)
+
+
+def tick_series(swaps: DataFrame, start_time, every: str, gas: bool = False) -> DataFrame:
+    """Last tick (and median gas) per time bucket for ONE pool
+    (reference pool_helpers.py:153-201). Caller pre-filters chain+address."""
+    return _tick_buckets(tick_clock(swaps), start_time, every, gas)
+
+
+def clock_series(
+    blocks: DataFrame, ticks: DataFrame, start_time, every: str = "6h", gas: bool = False
+) -> DataFrame:
+    """The price series from the two clocks (``block_clock``,
+    ``tick_clock``): both cut at ``start_time`` and resampled, then the
+    block buckets ⟕asof the tick buckets (reference
+    pool_helpers.py:202-204). A caller that keeps the clocks cached pays
+    neither the chain scan nor the dedups again."""
+    bn = _bn_buckets(blocks, start_time, every)
+    tk = _tick_buckets(ticks, start_time, every, gas)
+    bn, tk = [f.withColumnRenamed("bucket_ts", "block_timestamp") for f in (bn, tk)]
+    return asof_join(bn, tk, on="block_timestamp")
 
 
 def price_series(
@@ -79,15 +113,12 @@ def price_series(
     gas: bool = False,
 ) -> DataFrame:
     """bn_series ⟕asof tick_series on the bucket timestamp
-    (reference pool_helpers.py:202-204). Output columns:
+    (reference pool_helpers.py:202-204): ``clock_series`` over the two
+    clocks of these swaps. Output columns:
     (block_timestamp, block_number, tick[, gas_price, gas_used])."""
-    bn = bn_series(chain_swaps, start_time, every).withColumnRenamed(
-        "bucket_ts", "block_timestamp"
+    return clock_series(
+        block_clock(chain_swaps), tick_clock(pool_swaps), start_time, every, gas
     )
-    tk = tick_series(pool_swaps, start_time, every, gas=gas).withColumnRenamed(
-        "bucket_ts", "block_timestamp"
-    )
-    return asof_join(bn, tk, on="block_timestamp")
 
 
 def bn_at_date(swaps: DataFrame, dt) -> int | None:

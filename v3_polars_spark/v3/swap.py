@@ -3,18 +3,23 @@
 Reference: v3/helpers/pool_helpers.py:63-131 (createSwapDF) and
 v3/helpers/swap.py:41-212 (swapIn). Spark shape: the swap frame is a
 DataFrame pipeline (lead window + column math) over the liquidity
-distribution; it is O(#initialized ticks), so the branch logic collects it
-once and runs driver-side scalar kernels — the correct Spark idiom per
-SURVEY.md §3.2. Branch B's tick-crossing is the vectorized prefix-sum +
-first-covering plan, computed on the collected frame with numpy-free pure
-Python (frames are 10²-10⁴ rows; no JVM round-trips in the hot loop).
+distribution; it is O(#initialized ticks), so the Pool collects it once
+per as_of and the branch logic runs on the collected rows — the correct
+Spark idiom per SURVEY.md §3.2. Branch B's tick-crossing is one
+driver-side fold of those rows into a direction-ordered cumulative-depth
+array (``swap_depth``): the scalar ``swap_in`` bisects it in pure Python,
+and the batched ``quote_ladder`` ships the same array into its plan as one
+literal and bisects it per amount with a column ``filter`` (frames are
+10²-10⁴ rows; no JVM round-trips in the hot loop, no join in the plan).
 """
 
 from __future__ import annotations
 
 import bisect
+import json
 import math
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -34,6 +39,21 @@ class InRangeValues:
     in_range_to_swap1: float
     liquidity: float
     tick: int
+
+
+class DepthStep(NamedTuple):
+    """One tick of the depth array, in swap order: the running input depth
+    through it, its range and input amount, and the input/output sums of
+    the ticks crossed before it."""
+
+    cum_in: float
+    tick: int
+    liq: float
+    p_a: float
+    p_b: float
+    in_amt: float
+    prev_in: float
+    prev_out: float
 
 
 def swap_frame(
@@ -111,16 +131,15 @@ def swap_in(
     """Simulate a swap (reference v3/helpers/swap.py:41-212).
 
     Branch A (within current tick): pure scalar math. Branch B (cross
-    ticks): direction-sorted prefix sums of per-tick tradable amounts, first
-    tick whose cumulative depth covers the trade, scalar kernel for the
-    partial final tick. Returns (amt_out, (sqrt_price_last, sqrt_p, fee_dict)).
+    ticks): bisect ``swap_depth``'s cumulative-depth array for the first
+    tick that covers the trade, scalar kernel for the partial final tick.
+    Returns (amt_out, (sqrt_price_last, sqrt_p, fee_dict)).
 
     Note: the reference's `findMax` flag is a no-op (immediately overwritten,
     v3/helpers/swap.py:99-102, SURVEY.md §8.1 Q2) — not implemented.
     """
     assert amount_in != 0, "We do not support swaps of 0"
     zero_for_one = not token_in_is_token1
-    asset_in, asset_out = ("x", "y") if zero_for_one else ("y", "x")
     fee_dict: dict = {}
 
     in_range_test, in_range_to_swap = (
@@ -154,101 +173,73 @@ def swap_in(
     if fees:
         fee_dict[irv.tick] = (in_range_test * fee_frac, irv.liquidity)
 
-    if zero_for_one:
-        oor = [r for r in swap_df_rows if r["tick_a"] < irv.tick]
-        oor.sort(key=lambda r: r["tick_a"], reverse=True)
-    else:
-        oor = [r for r in swap_df_rows if r["tick_a"] > irv.tick]
-        oor.sort(key=lambda r: r["tick_a"])
-
-    cum_key = "xInTick" if zero_for_one else "yInTick"
-    cums, run = [], 0.0
-    for r in oor:
-        run += r[cum_key]
-        cums.append(run)
-    max_amount_out = cums[-1] if cums else 0.0
+    depth = swap_depth(swap_df_rows, irv, token_in_is_token1)
+    max_amount_out = depth[-1].cum_in if depth else 0.0
     assert max_amount_out > left_to_swap, "Not enough liquidity in pool"
 
-    # first covering tick: cums is nondecreasing -> bisect
-    idx = bisect.bisect_left(cums, left_to_swap_minus_fee)
-    liquid_row = oor[idx]
-    previous = oor[:idx]
-
-    sqrt_p_last_top, sqrt_p_last_bottom = liquid_row["p_b"], liquid_row["p_a"]
-    liquidity = liquid_row["liquidity"]
-
-    prev_in = sum(r[f"{asset_in}InTick"] for r in previous)
-    prev_out = sum(r[f"{asset_out}InTick"] for r in previous)
-    amt_in_to_swap_left = left_to_swap - prev_in
+    # first covering tick: cum_in is nondecreasing -> bisect
+    idx = bisect.bisect_left(depth, left_to_swap_minus_fee, key=lambda d: d.cum_in)
+    step = depth[idx]
+    amt_in_to_swap_left = left_to_swap - step.prev_in
     amt_in_swapped_left_minus_fee = amt_in_to_swap_left * (1 - fee_frac)
-    amt_out_prev_ticks = in_range_to_swap + prev_out
+    amt_out_prev_ticks = in_range_to_swap + step.prev_out
 
     if fees:
-        for r in previous:
-            fee_dict[r["tick_a"]] = (r[f"{asset_in}InTick"] * fee_frac, r["liquidity"])
-        fee_dict[liquid_row["tick_a"]] = (amt_in_to_swap_left * fee_frac, liquidity)
+        for d in depth[:idx]:
+            fee_dict[d.tick] = (d.in_amt * fee_frac, d.liq)
+        fee_dict[step.tick] = (amt_in_to_swap_left * fee_frac, step.liq)
 
     amt_out_last_tick, sqrt_price_last = sm.final_amt_out_from_tick(
-        zero_for_one,
-        sqrt_p_last_top,
-        sqrt_p_last_bottom,
-        amt_in_swapped_left_minus_fee,
-        liquidity,
+        zero_for_one, step.p_b, step.p_a, amt_in_swapped_left_minus_fee, step.liq
     )
     return amt_out_last_tick + amt_out_prev_ticks, (sqrt_price_last, irv.sqrt_p, fee_dict)
 
 
 def swap_depth(
-    swap_df: DataFrame, irv: InRangeValues, token_in_is_token1: bool
-) -> DataFrame:
-    """The direction-ordered cumulative-depth state as ONE broadcastable
-    row: (__darr array<struct<cum/tick/liq/prices/amounts/prev sums>>,
-    __max_cum). This is the build step of the quote path — the exact
-    analog of the reference's cached createSwapDF arrays that its scalar
-    bisect walks (v3/helpers/swap.py:122-143, pool_helpers.py:80-94).
-    Build it once per (frame, direction), ``.cache()`` it, and serve any
-    number of ``quote_ladder`` batches against it; passing ``depth=`` to
-    ``quote_ladder`` skips the rebuild."""
+    swap_df_rows: list[dict], irv: InRangeValues, token_in_is_token1: bool
+) -> list[DepthStep]:
+    """The direction-ordered cumulative-depth array both swapIn paths
+    bisect — the analog of the reference's cumulative sums over its cached
+    createSwapDF arrays (v3/helpers/swap.py:122-143, pool_helpers.py:80-94).
+
+    One fold over the collected swap-frame rows: keep the ticks beyond the
+    in-range one in the swap's direction, nearest first, and carry running
+    input/output sums. ``prev_in`` of a step is exactly ``cum_in`` of the
+    step before (one left-to-right float accumulation), and the last
+    ``cum_in`` is the depth max the reference-Q5 assert compares. A
+    direction with no tick beyond the in-range one gives ``[]``."""
     zero_for_one = not token_in_is_token1
     in_key, out_key = ("xInTick", "yInTick") if zero_for_one else ("yInTick", "xInTick")
     if zero_for_one:
-        oor = swap_df.filter(F.col("tick_a") < F.lit(irv.tick))
-        order = F.col("tick_a").desc()
+        oor = [r for r in swap_df_rows if r["tick_a"] < irv.tick]
     else:
-        oor = swap_df.filter(F.col("tick_a") > F.lit(irv.tick))
-        order = F.col("tick_a").asc()
-    w_cum = Window.orderBy(order).rowsBetween(Window.unboundedPreceding, 0)
-    w_prev = Window.orderBy(order).rowsBetween(Window.unboundedPreceding, -1)
-    # prev_* use the PRECEDING-rows window (not cum - current): identical
-    # left-to-right float accumulation as the scalar path's running sums.
-    # Kept asymmetric on purpose: max cum > left_to_swap (pre-fee) while
-    # the covering search uses >= left_minus_fee.
-    depth = oor.select(
-        F.col("tick_a").alias("__tick"),
-        F.col("liquidity").alias("__liq"),
-        F.col("p_a").alias("__p_a"),
-        F.col("p_b").alias("__p_b"),
-        F.col(in_key).alias("__in_amt"),
-        F.sum(in_key).over(w_cum).alias("__cum_in"),
-        F.coalesce(F.sum(in_key).over(w_prev), F.lit(0.0)).alias("__prev_in"),
-        F.coalesce(F.sum(out_key).over(w_prev), F.lit(0.0)).alias("__prev_out"),
-    )
-    # ONE row: the depth table as a cum-ordered array (array_sort on the
-    # struct orders by its first field, __cum_in — strictly increasing, no
-    # ties). The reference-Q5 depth assert's max cum is the LAST running
-    # sum — same left-to-right float accumulation, so max(cum) is
-    # bit-identical to the old full-frame window sum.
-    return depth.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "__cum_in", "__tick", "__liq", "__p_a", "__p_b",
-                    "__in_amt", "__prev_in", "__prev_out",
-                )
-            )
-        ).alias("__darr"),
-        F.max("__cum_in").alias("__max_cum"),
-    )
+        oor = [r for r in swap_df_rows if r["tick_a"] > irv.tick]
+    oor.sort(key=lambda r: r["tick_a"], reverse=zero_for_one)
+    depth, cum_in, prev_out = [], 0.0, 0.0
+    for r in oor:
+        prev_in, cum_in = cum_in, cum_in + r[in_key]
+        fields = (r["tick_a"], r["liquidity"], r["p_a"], r["p_b"], r[in_key])
+        depth.append(DepthStep(cum_in, *fields, prev_in, prev_out))
+        prev_out += r[out_key]
+    return depth
+
+
+_DEPTH_SCHEMA = (
+    "darr array<struct<cum_in:double,tick:bigint,liq:double,p_a:double,"
+    "p_b:double,in_amt:double,prev_in:double,prev_out:double>>, max_cum double"
+)
+
+
+def _depth_literal(depth: list[DepthStep]) -> Column:
+    """The depth array and its max (NULL when empty, as ``max`` over no
+    rows) as ONE literal struct column: a JSON string read by ``from_json``,
+    which the optimizer folds into a constant. Python's float repr and
+    Spark's JSON parser round-trip every double exactly."""
+    doc = {
+        "darr": [d._asdict() for d in depth],
+        "max_cum": depth[-1].cum_in if depth else None,
+    }
+    return F.from_json(F.lit(json.dumps(doc)), _DEPTH_SCHEMA)
 
 
 _FEE_TYPE = "array<struct<tick:bigint,fee:double,liquidity:double>>"
@@ -351,37 +342,36 @@ def _price_quotes(
 
 
 def quote_ladder(
-    swap_df: DataFrame | None,
+    swap_df: list[dict] | None,
     irv: InRangeValues,
     token_in_is_token1: bool,
     amounts: DataFrame,
     fee_ppm: int,
     amount_col: str = "amount_in",
     fees: bool = False,
-    depth: DataFrame | None = None,
+    depth: list[DepthStep] | None = None,
 ) -> DataFrame:
     """Batched swapIn: quote MANY input amounts against one swap frame in a
     single distributed plan — the batch-of-swaps generalization SURVEY.md
     §2.9 calls for, with zero driver loops.
 
-    The scalar path's bisect over the cumulative-depth array (reference
-    v3/helpers/swap.py:144-168) stays an ARRAY bisect: the ordered
-    cumulative-depth table (tiny, O(#initialized ticks)) collapses to ONE
-    broadcast row holding the sorted depth array, and the covering-row
-    search — bisect_left == "first cum >= axis" — is a per-amount
-    ``filter``+``get(0)`` column expression. All swap math runs as column
-    expressions with the same operation order as the scalar kernels, so
-    results are bit-identical to looping ``swap_in`` (pinned in tests).
+    ``swap_df`` is the collected swap-frame rows (``Pool.calc_swap_df``'s
+    memo); ``depth=`` takes their ``swap_depth`` fold instead, already
+    built for this direction. The scalar path's bisect over that array
+    (reference v3/helpers/swap.py:144-168) stays an ARRAY bisect: the
+    array and its max enter the plan as ONE literal column, and the
+    covering-row search — bisect_left == "first cum >= axis" — is a
+    per-amount ``filter``+``get(0)`` column expression. All swap math runs
+    as column expressions with the same operation order as the scalar
+    kernels, so results are bit-identical to looping ``swap_in`` (pinned
+    in tests).
 
-    Scale shape: amounts can be arbitrarily large — after the broadcast
-    of the single depth row, the amount side is ONE narrow map stage: no
-    join duplication (the old join×agg shape duplicated every amount row
-    per qualifying tick and re-aggregated it back), no shuffle, no
-    single-task stage. The only depth-side window is the per-frame
-    cumsum over O(#ticks) rows (single pool — ``quote_ladder_multi`` is
-    the many-pool form, partitioned by pool keys).
-    Insufficient-depth quotes get sufficient=false and NULL outputs
-    instead of the scalar assert; so do NULL amounts.
+    Scale shape: amounts can be arbitrarily large — the amount side is ONE
+    narrow projection: no join, no broadcast, no window, no shuffle
+    (``quote_ladder_multi`` is the many-pool form, partitioned by pool
+    keys). Insufficient-depth quotes get sufficient=false and NULL outputs
+    instead of the scalar assert; so do NULL amounts, and every branch-B
+    amount in a direction with no tick beyond the in-range one.
 
     Output: all ``amounts`` columns + amt_out, sqrt_price_last, branch
     ('A'|'B'), sufficient; with ``fees=True`` also ``fees`` — an
@@ -399,11 +389,9 @@ def quote_ladder(
         if zero_for_one
         else (irv.in_range1, irv.in_range_to_swap1)
     )
-
-    # --- depth side: prebuilt (cached) or derived from the swap frame ----
-    darr = depth if depth is not None else swap_depth(swap_df, irv, token_in_is_token1)
-
-    # --- amount side: one narrow stage, no shuffle -----------------------
+    if depth is None:
+        depth = swap_depth(swap_df, irv, token_in_is_token1)
+    depth_lit = _depth_literal(depth)
     amt = amounts.withColumns(
         _quote_inputs(F.col(amount_col), F.lit(in_range_test), F.lit(1 - fee_frac))
     )
@@ -411,12 +399,12 @@ def quote_ladder(
     axis = F.col("__axis")
     # covering row = first depth element with cum_in >= axis (bisect_left);
     # F.get returns NULL past the end — the insufficient case
-    cov = F.get(F.filter(F.col("__darr"), lambda d: axis <= d["__cum_in"]), F.lit(0))
-    depth_cols = ["__tick", "__liq", "__p_a", "__p_b", "__prev_in", "__prev_out"]
+    cov = F.get(F.filter(depth_lit["darr"], lambda d: axis <= d["cum_in"]), F.lit(0))
+    depth_cols = ["tick", "liq", "p_a", "p_b", "prev_in", "prev_out"]
     proj = [
         *[F.col(c) for c in amt.columns],
-        F.col("__max_cum"),
-        *[cov[c].alias(c) for c in depth_cols],
+        depth_lit["max_cum"].alias("__max_cum"),
+        *[cov[c].alias(f"__{c}") for c in depth_cols],
     ]
     if fees:
         # crossed ticks = every depth element strictly below the axis,
@@ -425,16 +413,13 @@ def quote_ladder(
         proj.append(
             F.array_sort(
                 F.transform(
-                    F.filter(F.col("__darr"), lambda d: d["__cum_in"] < axis),
-                    lambda d: _fee_entry(
-                        d["__tick"], d["__in_amt"] * F.lit(fee_frac), d["__liq"]
-                    ),
+                    F.filter(depth_lit["darr"], lambda d: d["cum_in"] < axis),
+                    lambda d: _fee_entry(d["tick"], d["in_amt"] * F.lit(fee_frac), d["liq"]),
                 )
             ).alias("__prev_fees")
         )
-    joined = amt.join(F.broadcast(darr), F.lit(True), "left").select(*proj)
     return _price_quotes(
-        joined,
+        amt.select(*proj),
         amounts.columns,
         amount_col,
         zero_for_one,
@@ -473,7 +458,7 @@ def quote_ladder_multi(
 
     It shares ``swap_frame``, the swap_math column kernels and the branch
     A/B pricing with ``quote_ladder``; only the plan differs (a join and a
-    per-quote aggregate on pool keys instead of a broadcast depth row).
+    per-quote aggregate on pool keys instead of a literal depth array).
 
     Output: amounts columns + amt_out, sqrt_price_last, branch, sufficient
     (+ fees with ``fees=True``). Bit-parity with looping Pool.swap_in per
