@@ -160,3 +160,19 @@ def test_with_decimal_amounts_exact_beyond_double(spark):
         F.sum("a").alias("s")
     ).first().s
     assert int(dbl) != 3 * (2**60 + 1)  # the documented double drift
+
+
+def test_sync_resumes_on_file_uri(spark, tmp_path):
+    """A second sync into a ``file://`` data_path resumes after the landed
+    blocks: it writes no segment and leaves every table's rows unchanged."""
+    from test_v3_kernels import _gen_pool
+
+    gp = _gen_pool()
+    src = str(tmp_path / "src")
+    gp.pool_dataset(3, src, n_pools=1, n_swaps=50, n_mb=20, span_blocks=1_000, n_syncs=1)
+    conn = LocalParquetConnector(spark, src)
+    landed = "file://" + str(tmp_path / "landed")
+    assert set(update_tables(spark, conn, landed, gp.CHAIN).values()) == {1}
+    rows = {t: T.read_table(spark, landed, t).count() for t in T.TABLES}
+    assert update_tables(spark, conn, landed, gp.CHAIN) == dict.fromkeys(T.TABLES, 0)
+    assert {t: T.read_table(spark, landed, t).count() for t in T.TABLES} == rows

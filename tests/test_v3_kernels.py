@@ -346,3 +346,191 @@ def test_pool_price_series_sees_append(spark, gen, tmp_path):
     assert after == _rows(_fresh_series(spark, copy, pool, start, "1h", False))
     assert max(r["block_number"] for r in after) == newest
     assert len(after) > len(before) and after[: len(before)] == before
+
+
+def test_tick_twap_matches_bruteforce_generated(spark, gen):
+    """Oracle-semantics TWAP over a generated pool's swaps equals the
+    sequential hold-until-next integration of its last swap per timestamp."""
+    from v3_polars_spark import tables as T
+    from v3_polars_spark.v3 import tick_twap
+
+    gp = _gen_pool()
+    _, data, _, pools = gen
+    raw = T.read_table(spark, data, "pool_swap_events")
+    swaps = T.tenant_filter(raw, gp.CHAIN, next(iter(pools)))
+    start, end = gp.GENESIS + dt.timedelta(hours=1), gp.GENESIS + dt.timedelta(hours=10)
+    row = tick_twap(swaps, start, end).collect()[0]
+
+    window = (F.col("block_timestamp") >= F.lit(start)) & (F.col("block_timestamp") < F.lit(end))
+    last = {}
+    for r in swaps.filter(window).collect():  # dedup to last per timestamp (tiebreak order)
+        o = (r.block_number, r.transaction_index, r.log_index)
+        if r.block_timestamp not in last or o > last[r.block_timestamp][0]:
+            last[r.block_timestamp] = (o, int(r.tick))
+    series = sorted((ts, tick) for ts, (_, tick) in last.items())
+    assert len(series) > 2
+    total = (series[-1][0] - series[0][0]).total_seconds()
+    wsum = sum((t2 - t1).total_seconds() * k for (t1, k), (t2, _) in zip(series, series[1:]))
+    assert abs(row.avg_tick - wsum / total) < 1e-9
+    assert abs(row.twap_price - 1.0001 ** row.avg_tick) < 1e-12
+    assert row.n_swaps == len(series)
+
+
+# -- the listing-keyed frames of a Pool, on a copy of the generated pools ------
+
+def _copy(gen, tmp_path):
+    """(copy of the generated data, first pool's address, its dataset entry)."""
+    ds, data, _, pools = gen
+    copy = str(tmp_path / "data")
+    shutil.copytree(data, copy)
+    return copy, next(iter(pools)), ds.pools[0]
+
+
+def _append(copy, addr, n=3):
+    """Land a later segment in the raw swap and mint/burn tables: this
+    pool's last ``n`` events of each, moved 20 h (6,000 blocks) on, the
+    swaps at a tick no earlier swap has. Returns (newest block, new tick)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for table in ("pool_swap_events", "pool_mint_burn_events"):
+        src = pq.read_table(os.path.join(copy, table, "part-0.parquet"))
+        seg = src.to_pandas()
+        seg = seg[seg["address"] == addr].tail(n)
+        seg["block_number"] += 6_000
+        seg["block_timestamp"] += dt.timedelta(hours=20)
+        if table == "pool_swap_events":
+            tick = max(int(t) for t in src.column("tick").to_pylist()) + 1
+            seg["tick"] = str(tick)
+            newest = int(seg["block_number"].max())
+        pq.write_table(
+            pa.Table.from_pandas(seg, schema=src.schema, preserve_index=False),
+            os.path.join(copy, table, "part-1.parquet"),
+        )
+    return newest, tick
+
+
+def _marks(sp):
+    """Saved frame dir -> mtime of its _RAW_FINGERPRINT marker."""
+    return {
+        d: os.stat(os.path.join(d, "_RAW_FINGERPRINT")).st_mtime_ns
+        for d, _, names in os.walk(sp)
+        if "_RAW_FINGERPRINT" in names
+    }
+
+
+def _multiset(df):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.collect())
+
+
+def _fresh(spark, copy, addr, table):
+    """A Pool frame built straight from the raw table, never cached."""
+    from v3_polars_spark import tables as T
+
+    gp = _gen_pool()
+    df = T.tenant_filter(T.read_table(spark, copy, table), gp.CHAIN, addr)
+    return T.typed_events(df, table)
+
+
+def test_save_path_roundtrip_generated(spark, gen, tmp_path):
+    """The saved frames land under save_path/<chain>/<pool>/<table>, and a
+    second Pool reads them back with the same liquidity and price."""
+    from v3_polars_spark.v3 import Pool
+
+    gp = _gen_pool()
+    _, _, as_of, _ = gen
+    copy, addr, p = _copy(gen, tmp_path)
+    sp = str(tmp_path / "save")
+    p1 = Pool(spark, addr, gp.CHAIN, copy, save_path=sp)
+    liq = {r["tick"]: r["liquidity"] for r in p1.create_liq(as_of).collect()}
+    base = os.path.join(sp, gp.CHAIN, addr)
+    want = {os.path.join(base, t) for t in ("pool_swap_events", "pool_mint_burn_events")}
+    assert set(_marks(sp)) == want
+    assert all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in want)
+
+    p2 = Pool(spark, addr, gp.CHAIN, copy, save_path=sp)
+    assert {r["tick"]: r["liquidity"] for r in p2.create_liq(as_of).collect()} == liq
+    assert liq == p.liquidity_at(as_of)
+    assert p2.get_price_at(as_of) == p1.get_price_at(as_of) == p.price_at(as_of)
+
+
+def test_save_path_staleness_rebuild_generated(spark, gen, tmp_path):
+    """An untouched source is served as saved, an append rebuilds the
+    saved frames, and refresh=True rebuilds them regardless."""
+    from v3_polars_spark.v3 import Pool
+
+    gp = _gen_pool()
+    copy, addr, _ = _copy(gen, tmp_path)
+    sp = str(tmp_path / "save")
+    n = Pool(spark, addr, gp.CHAIN, copy, save_path=sp).swaps.count()
+    marks = _marks(sp)
+
+    assert Pool(spark, addr, gp.CHAIN, copy, save_path=sp).swaps.count() == n
+    assert _marks(sp) == marks  # served as saved
+
+    _append(copy, addr)
+    assert Pool(spark, addr, gp.CHAIN, copy, save_path=sp).swaps.count() == n + 3
+    rebuilt = _marks(sp)
+    assert all(rebuilt[d] != m for d, m in marks.items())
+
+    assert Pool(spark, addr, gp.CHAIN, copy, save_path=sp, refresh=True).swaps.count() == n + 3
+    assert all(_marks(sp)[d] != m for d, m in rebuilt.items())
+
+
+def test_pool_without_save_path_sees_append(spark, gen, tmp_path):
+    """Two Pools without save_path, rows appended to the raw tables in
+    between: the second counts them in swaps, mb and its price series
+    instead of being served the first one's cached frames."""
+    from v3_polars_spark.v3 import Pool
+
+    gp = _gen_pool()
+    copy, addr, _ = _copy(gen, tmp_path)
+    first = Pool(spark, addr, gp.CHAIN, copy)
+    n_swaps, n_mb = first.swaps.count(), first.mb.count()
+    first.get_price_series(gp.GENESIS, "1h").collect()  # caches its clocks
+
+    newest, tick = _append(copy, addr)
+    second = Pool(spark, addr, gp.CHAIN, copy)
+    assert (second.swaps.count(), second.mb.count()) == (n_swaps + 3, n_mb + 3)
+    series = second.get_price_series(gp.GENESIS, "1h").collect()
+    last = max(series, key=lambda r: r["block_timestamp"])
+    assert (last["block_number"], last["tick"]) == (newest, tick)
+    assert (first.swaps.count(), first.mb.count()) == (n_swaps, n_mb)  # fixed at first access
+
+
+def test_pool_save_crash_before_marker_rebuilds(spark, gen, tmp_path, monkeypatch):
+    """A rebuild that dies after the parquet overwrite, before its marker
+    is written, is never trusted: the next Pool on the same save_path
+    rebuilds, and its frames equal a fresh build as row multisets."""
+    from v3_polars_spark import fsutil
+    from v3_polars_spark.v3 import Pool
+
+    gp = _gen_pool()
+    copy, addr, _ = _copy(gen, tmp_path)
+    sp = str(tmp_path / "save")
+    Pool(spark, addr, gp.CHAIN, copy, save_path=sp)
+    _append(copy, addr)
+
+    real, calls = fsutil.write_text_atomic, []
+
+    def crash_once(*a):
+        calls.append(a)
+        if len(calls) == 1:
+            raise OSError("crash before the marker")
+        real(*a)
+
+    monkeypatch.setattr(fsutil, "write_text_atomic", crash_once)
+    with pytest.raises(OSError, match="crash before the marker"):
+        Pool(spark, addr, gp.CHAIN, copy, save_path=sp)
+    monkeypatch.setattr(fsutil, "write_text_atomic", real)
+
+    marks = _marks(sp)
+    pool = Pool(spark, addr, gp.CHAIN, copy, save_path=sp)
+    assert all(_marks(sp)[d] != m for d, m in marks.items())  # both rebuilt
+    for table, got in (("pool_swap_events", pool.swaps), ("pool_mint_burn_events", pool.mb)):
+        raw = os.path.join(copy, table)
+        marker = os.path.join(sp, gp.CHAIN, addr, table, "_RAW_FINGERPRINT")
+        assert fsutil.read_text(spark, marker) == fsutil.dir_fingerprint(spark, raw)
+        assert _multiset(got) == _multiset(_fresh(spark, copy, addr, table))

@@ -15,9 +15,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import fsutil
 from .. import tables as T
 from ..ops import recode_join
 from .connectors import Connector
@@ -30,13 +32,19 @@ def max_landed_block(
     spark: SparkSession, data_path: str, table: str, chain: str
 ) -> int | None:
     """Resume point: max block_number already landed for this chain
-    (reference data_update.py:162-189)."""
+    (reference data_update.py:162-189), None when nothing has landed.
+    The path resolves through the Hadoop FS API (fsutil), so a
+    ``file://``, ``hdfs://`` or ``s3a://`` data_path resumes like a local
+    one; any read error but an empty table directory raises, instead of
+    restarting the sync at the first block and landing every row again."""
     path = os.path.join(data_path, table)
-    if not os.path.isdir(path):
+    if not fsutil.exists(spark, path):
         return None
     try:
         df = spark.read.parquet(path)
-    except Exception:
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":  # no parquet file yet
+            raise
         return None
     row = (
         df.filter(F.col("chain_name") == chain)

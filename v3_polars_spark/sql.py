@@ -29,9 +29,10 @@ def register_tables(
 ) -> list[str]:
     """Create temp views over a landed event-table directory.
 
-    - ``swaps{suffix}`` / ``mint_burns{suffix}``: with the ``as_of``
-      total-order key derived (and mint/burn numeric casts applied, as the
-      batch reader does — reference v3/state.py:135-167);
+    - ``swaps{suffix}`` / ``mint_burns{suffix}``: prepared by
+      ``tables.typed_events``, the reader ``Pool`` uses (mint/burn numeric
+      casts, then the ``as_of`` total-order key — reference
+      v3/state.py:135-167);
     - ``factory{suffix}`` / ``initialize_events{suffix}``: raw.
 
     Returns the view names. Example SQL (same plan as create_liq):
@@ -50,22 +51,9 @@ def register_tables(
     """
     names = []
     for table, base in VIEWS.items():
-        df = T.read_table(spark, data_path, table)
-        if table == "pool_mint_burn_events":
-            from pyspark.sql import functions as F
-
-            df = df.withColumns(
-                {
-                    "amount": F.col("amount").cast("double"),
-                    "tick_lower": F.col("tick_lower").cast("long"),
-                    "tick_upper": F.col("tick_upper").cast("long"),
-                    "type_of_event": F.col("type_of_event").cast("double"),
-                }
-            )
-        if table in ("pool_swap_events", "pool_mint_burn_events"):
-            df = T.with_as_of(df)
         name = f"{base}{suffix}"
-        df.createOrReplaceTempView(name)
+        df = T.read_table(spark, data_path, table)
+        T.typed_events(df, table).createOrReplaceTempView(name)
         names.append(name)
     return names
 

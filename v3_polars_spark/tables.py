@@ -14,9 +14,9 @@ Semantics from the reference (SURVEY.md §1):
 Scale design: the canonical on-disk layout is hive-partitioned by
 ``chain_name`` so tenant filters become partition pruning and "drop chain"
 (reference v3/helpers/pool_helpers.py:207-231, S6) becomes a partition
-delete instead of a per-file probe-and-remove. Reads enforce the declared
-StructType so string-typed big ints never get auto-inferred as longs
-(SURVEY.md §1.3).
+delete instead of a per-file probe-and-remove. Reads keep the registry's
+column order, and the string-typed big ints stay strings until
+``typed_events`` casts them (SURVEY.md §1.3).
 """
 
 from __future__ import annotations
@@ -102,25 +102,16 @@ SCHEMAS: dict[str, StructType] = {
 }
 
 
-def read_table(
-    spark: SparkSession,
-    data_path: str,
-    table: str,
-    enforce_schema: bool = False,
-) -> DataFrame:
+def read_table(spark: SparkSession, data_path: str, table: str) -> DataFrame:
     """Read an event table from its parquet directory (S1).
 
     The reference globs ``{data_path}/{table}/*.parquet``; a Spark directory
     read is the same implicit UNION ALL of segments, plus partition
-    discovery if the layout is hive-partitioned. ``enforce_schema=False``
-    (default) trusts parquet footers but re-orders/prunes to the registry
-    columns when they all exist — robust to both the reference's example
-    layout and our partitioned sink.
+    discovery if the layout is hive-partitioned. Trusts parquet footers but
+    re-orders/prunes to the registry columns when they all exist — robust
+    to both the reference's example layout and our partitioned sink.
     """
-    path = os.path.join(data_path, table)
-    if enforce_schema:
-        return spark.read.schema(SCHEMAS[table]).parquet(path)
-    df = spark.read.parquet(path)
+    df = spark.read.parquet(os.path.join(data_path, table))
     want = [f.name for f in SCHEMAS[table].fields]
     have = set(df.columns)
     if all(c in have for c in want):
@@ -146,6 +137,29 @@ def with_as_of(df: DataFrame) -> DataFrame:
     return df.withColumn(
         "as_of", F.col("block_number") + F.col("transaction_index") / F.lit(1e4)
     )
+
+
+# the mint/burn columns the v3 kernels read as numbers (reference
+# v3/state.py:157-164); the amount stays a lossy double, as there
+_MB_CASTS = {
+    "amount": "double",
+    "tick_lower": "long",
+    "tick_upper": "long",
+    "type_of_event": "double",
+}
+
+
+def typed_events(df: DataFrame, table: str) -> DataFrame:
+    """The read-side preprocessing of a (tenant-filtered) v3 event table
+    (reference v3/state.py:131-167): mint/burns get their numeric casts,
+    then swaps and mint/burns get ``as_of``; other tables pass through.
+    Every reader of the event tables (``Pool``, ``sql.register_tables``,
+    the entry's reference fixtures) prepares them here."""
+    if table == "pool_mint_burn_events":
+        df = df.withColumns({c: F.col(c).cast(t) for c, t in _MB_CASTS.items()})
+    if table in ("pool_swap_events", "pool_mint_burn_events"):
+        df = with_as_of(df)
+    return df
 
 
 def with_decimal_amounts(

@@ -4,10 +4,8 @@ from .pool import Pool
 from .positions import POSITION_COLUMNS, nfp_positions
 from .series import (
     bn_at_date,
-    bn_series,
     liquidity_price_frames,
     price_series,
-    tick_series,
     tick_to_price,
     tick_twap,
 )
@@ -25,7 +23,6 @@ __all__ = [
     "InRangeValues",
     "Pool",
     "bn_at_date",
-    "bn_series",
     "in_range_values",
     "liquidity_distribution",
     "liquidity_timeline",
@@ -40,6 +37,5 @@ __all__ = [
     "swap_frame",
     "swap_in",
     "swap_math",
-    "tick_series",
     "tick_to_price",
 ]

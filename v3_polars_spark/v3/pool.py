@@ -3,7 +3,9 @@
 
 Differences by design (Spark-first):
 - table materialization uses ``df.cache()`` (executor-memory columnar
-  cache) instead of driver RAM;
+  cache) instead of driver RAM, and every cached frame is keyed on the
+  file listing of the raw table it was read from (``Pool._listed``), so a
+  Pool never serves rows cached under an older listing;
 - every ordered op has explicit (block_number, transaction_index, log_index)
   determinism keys;
 - the swap precompute keeps the reference's single-slot memo keyed by exact
@@ -13,6 +15,7 @@ Differences by design (Spark-first):
 from __future__ import annotations
 
 import posixpath
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,21 +53,21 @@ class Pool:
     ):
         """``save_path`` is the cross-session analog of the reference's
         ``readFromMemoryOrDisk(save=True)`` (state.py:114-174): the
-        preprocessed (tenant-filtered, as_of-keyed) swap / mint-burn
-        frames are persisted as parquet under ``save_path/<table>/`` on
-        first access and read straight back on later Pool inits —
-        skipping the raw-table scan + filter entirely. In-session reuse
-        is covered either way by ``.cache()``.
+        preprocessed (tenant-filtered, typed, as_of-keyed) swap /
+        mint-burn frames are persisted as parquet under
+        ``save_path/<chain>/<pool>/<table>/`` on first access and read
+        straight back on later Pool inits — skipping the raw-table scan +
+        filter entirely.
 
         Staleness: unlike the reference's per-session in-memory cache
-        (which can never outlive its data), a persisted frame CAN go
-        stale when new events land in the raw tables. Each save carries
-        a fingerprint of the source directory's file listing
-        (fsutil.dir_fingerprint — names/sizes/mtimes, no data scan);
-        a later init whose raw listing differs rebuilds automatically.
-        ``refresh=True`` forces a rebuild regardless. All marker/
-        fingerprint IO goes through the Hadoop FS API, so remote
-        (hdfs://, s3a://) save_paths behave the same as local ones."""
+        (which can never outlive its data), a saved or cached frame CAN
+        go stale when new events land in the raw tables. So, with or
+        without ``save_path``, every frame is keyed on the file listing
+        of its raw table (``_listed``): a later Pool whose raw listing
+        differs rebuilds instead of reusing. ``refresh=True`` forces a
+        rebuild of the saved frames regardless. All marker/fingerprint
+        IO goes through the Hadoop FS API, so remote (hdfs://, s3a://)
+        paths behave the same as local ones."""
         self.spark = spark
         self.chain = chain
         self.pool = pool.lower()  # normalize checksummed addresses (state.py:45)
@@ -88,7 +91,7 @@ class Pool:
         self._swaps: DataFrame | None = None
         self._mb: DataFrame | None = None
         self._tick_clock: DataFrame | None = None
-        self._block_clock: tuple[str, DataFrame] | None = None  # (fingerprint, clock)
+        self._block_clock: tuple[str, DataFrame] | None = None  # a _listed pair
         self.max_supported = -1
         if pull:
             s, m = self.swaps, self.mb
@@ -101,86 +104,91 @@ class Pool:
             # undefined — keep the -1 sentinel instead of min(None, int)
             self.max_supported = min(bounds) if all(b is not None for b in bounds) else -1
 
-    # readFromMemoryOrDisk analogs (reference state.py:114-174) ------------
-    def _saved_or(self, table: str, build) -> DataFrame:
-        """Return the preprocessed frame from ``save_path`` if previously
-        persisted AND still current, else (re)build and persist it.
-        The location is namespaced by (chain, pool) — the frames are
-        tenant-FILTERED, so a table-only key would silently serve one
-        pool's events as another's when two Pools share a save_path.
+    # readFromMemoryOrDisk analog (reference state.py:114-174) ------------
+    def _listed(
+        self,
+        table: str,
+        build: Callable[[], DataFrame],
+        held: tuple[str, DataFrame] | None = None,
+        save: bool = True,
+    ) -> tuple[str, DataFrame]:
+        """The one freshness rule for every frame this Pool serves: the
+        frame ``build`` reads from the raw ``table`` is keyed on that
+        table's file listing (fsutil.dir_fingerprint — names/sizes/mtimes,
+        no data scan), listed once per call. Returns (listing, frame).
 
-        Currency check: the save carries ``_RAW_FINGERPRINT`` (a listing
-        fingerprint of the SOURCE table directory). If the raw table
-        gained/changed files since the save, the cache rebuilds instead
-        of silently serving pre-append state forever. Spark's file index
-        ignores underscore-prefixed files, so the extra marker never
-        pollutes the parquet read."""
-        if self.save_path is None:
-            return build()
-        loc = posixpath.join(self.save_path, self.chain, self.pool, table)
+        - ``held``, a pair returned earlier, comes back as is while the
+          listing is unchanged; otherwise it is unpersisted and replaced.
+        - With ``save_path`` set (and ``save``), the frame is persisted
+          under ``save_path/<chain>/<pool>/<table>`` with the listing in a
+          ``_RAW_FINGERPRINT`` marker, and read back from there while the
+          marker matches and ``refresh`` is off. The location is
+          namespaced by (chain, pool): the frames are tenant-FILTERED, so
+          a table-only key would serve one pool's events as another's
+          when two Pools share a save_path. Spark's file index ignores
+          underscore-prefixed files, so the marker never pollutes the
+          parquet read.
+        - The frame is cached with the listing in its plan: Spark's cache
+          matches plans, not file listings, so a no-op filter on the
+          listing keeps a frame cached under an older one (another
+          Pool's) from being served here, while Pools that see the same
+          listing share one cached frame."""
         raw_dir = posixpath.join(self.data_path, table)
         current = fsutil.dir_fingerprint(self.spark, raw_dir)
-        saved = fsutil.read_text(self.spark, posixpath.join(loc, "_RAW_FINGERPRINT"))
-        fresh = (
-            not self.refresh
-            and saved == current
-            and fsutil.exists(self.spark, posixpath.join(loc, "_SUCCESS"))
-        )
-        if not fresh:
-            # Drop session-level caches for both paths: the raw dir's
-            # file-status listing may predate the append that made the
-            # save stale, and an earlier Pool's .cache() of the save
-            # location would otherwise serve the pre-overwrite rows
-            # (CacheManager matches by plan, i.e. by path).
-            self.spark.catalog.refreshByPath(raw_dir)
-            self.spark.catalog.refreshByPath(loc)
-            build().write.mode("overwrite").parquet(loc)
-            # Atomic marker: a rebuild that dies between the overwrite
-            # and the marker leaves no/old fingerprint -> reads stale ->
-            # rebuilt next init. save_path still assumes one writer at a
-            # time (concurrent overwrites of the *parquet* can interleave);
-            # the marker just guarantees a torn rebuild is never trusted.
-            fsutil.write_text_atomic(
-                self.spark, posixpath.join(loc, "_RAW_FINGERPRINT"), current
+        if held is not None:
+            if held[0] == current:
+                return held
+            held[1].unpersist()
+        if not save or self.save_path is None:
+            df = build()
+        else:
+            loc = posixpath.join(self.save_path, self.chain, self.pool, table)
+            marker = posixpath.join(loc, "_RAW_FINGERPRINT")
+            fresh = (
+                not self.refresh
+                and fsutil.read_text(self.spark, marker) == current
+                and fsutil.exists(self.spark, posixpath.join(loc, "_SUCCESS"))
             )
-            self.spark.catalog.refreshByPath(loc)
-        return self.spark.read.parquet(loc)
+            if not fresh:
+                # Drop session-level caches for both paths: the raw dir's
+                # file-status listing may predate the append that made the
+                # save stale, and an earlier Pool's .cache() of the save
+                # location would otherwise serve the pre-overwrite rows
+                # (CacheManager matches by plan, i.e. by path).
+                self.spark.catalog.refreshByPath(raw_dir)
+                self.spark.catalog.refreshByPath(loc)
+                build().write.mode("overwrite").parquet(loc)
+                # Atomic marker: a rebuild that dies between the overwrite
+                # and the marker leaves no/old fingerprint -> reads stale ->
+                # rebuilt next init. save_path still assumes one writer at a
+                # time (concurrent overwrites of the *parquet* can interleave);
+                # the marker just guarantees a torn rebuild is never trusted.
+                fsutil.write_text_atomic(self.spark, marker, current)
+                self.spark.catalog.refreshByPath(loc)
+            df = self.spark.read.parquet(loc)
+        return current, df.filter(F.lit(current).isNotNull()).cache()
+
+    def _pool_table(self, table: str) -> DataFrame:
+        """This pool's rows of a raw event table, typed by
+        tables.typed_events and fixed at first access, as a ``v3Pool``
+        reads once."""
+
+        def build() -> DataFrame:
+            df = T.read_table(self.spark, self.data_path, table)
+            return T.typed_events(T.tenant_filter(df, self.chain, self.pool), table)
+
+        return self._listed(table, build)[1]
 
     @property
     def swaps(self) -> DataFrame:
         if self._swaps is None:
-            def build() -> DataFrame:
-                df = T.tenant_filter(
-                    T.read_table(self.spark, self.data_path, "pool_swap_events"),
-                    self.chain,
-                    self.pool,
-                )
-                return T.with_as_of(df)
-
-            self._swaps = self._saved_or("pool_swap_events", build).cache()
+            self._swaps = self._pool_table("pool_swap_events")
         return self._swaps
 
     @property
     def mb(self) -> DataFrame:
         if self._mb is None:
-            def build() -> DataFrame:
-                df = T.tenant_filter(
-                    T.read_table(
-                        self.spark, self.data_path, "pool_mint_burn_events"
-                    ),
-                    self.chain,
-                    self.pool,
-                ).withColumns(
-                    {
-                        "amount": F.col("amount").cast("double"),
-                        "tick_lower": F.col("tick_lower").cast("long"),
-                        "tick_upper": F.col("tick_upper").cast("long"),
-                        "type_of_event": F.col("type_of_event").cast("double"),
-                    }
-                )
-                return T.with_as_of(df)
-
-            self._mb = self._saved_or("pool_mint_burn_events", build).cache()
+            self._mb = self._pool_table("pool_mint_burn_events")
         return self._mb
 
     # point-in-time getters (reference state.py:197-244) ------------------
@@ -272,25 +280,19 @@ class Pool:
         """getPriceSeries (reference pool_helpers.py:134-204) from two cached
         clocks (series.block_clock / tick_clock), so a call scans no raw
         table. The tick clock is this pool's, built from ``swaps`` and kept
-        as long as they are. The block clock is chain-wide, built from the
-        raw swap table and kept under that directory's listing fingerprint
-        (fsutil.dir_fingerprint — names/sizes/mtimes, no data scan): an
-        append to the table shows on the next call, which rebuilds the
-        clock and unpersists the one it replaces."""
-        raw_dir = posixpath.join(self.data_path, "pool_swap_events")
-        current = fsutil.dir_fingerprint(self.spark, raw_dir)
-        if self._block_clock is None or self._block_clock[0] != current:
-            if self._block_clock is not None:
-                self._block_clock[1].unpersist()
-            chain_swaps = T.tenant_filter(
-                T.read_table(self.spark, self.data_path, "pool_swap_events"), self.chain
-            )
-            # Spark's cache matches plans, not file listings: the no-op
-            # fingerprint filter keeps a clock cached under an older listing
-            # (another Pool's) from being served for this one, while Pools
-            # that see the same listing share one cached clock
-            listed = chain_swaps.filter(F.lit(current).isNotNull())
-            self._block_clock = (current, block_clock(listed).cache())
+        as long as they are (it inherits their listing key). The block
+        clock is chain-wide, built from the raw swap table and re-keyed on
+        its listing every call (``_listed``): an append to the table shows
+        on the next call, which rebuilds the clock and unpersists the one
+        it replaces."""
+
+        def chain_clock() -> DataFrame:
+            df = T.read_table(self.spark, self.data_path, "pool_swap_events")
+            return block_clock(T.tenant_filter(df, self.chain))
+
+        self._block_clock = self._listed(
+            "pool_swap_events", chain_clock, held=self._block_clock, save=False
+        )
         if self._tick_clock is None:
             self._tick_clock = tick_clock(self.swaps).cache()
         return clock_series(

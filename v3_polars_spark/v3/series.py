@@ -9,7 +9,7 @@ steps build one "clock" per side — ``block_clock`` (chain) and
 ``start_time``, so a session can cache them; ``clock_series`` is the rest.
 
 Parity notes:
-- `bn_series` is CHAIN-wide (not pool-filtered) while `tick_series` is
+- `block_clock` is CHAIN-wide (not pool-filtered) while `tick_clock` is
   pool-filtered — intentional reference asymmetry (SURVEY.md §8.1 Q4): block
   numbers advance chain-wide even in buckets where the pool didn't trade;
   the as-of join backfills the tick.
@@ -79,18 +79,6 @@ def _tick_buckets(ticks: DataFrame, start_time, every: str, gas: bool) -> DataFr
     return out
 
 
-def bn_series(swaps: DataFrame, start_time, every: str) -> DataFrame:
-    """Latest block number per time bucket (reference pool_helpers.py:136-151).
-    Input: chain-filtered swaps (NOT pool-filtered — Q4)."""
-    return _bn_buckets(block_clock(swaps), start_time, every)
-
-
-def tick_series(swaps: DataFrame, start_time, every: str, gas: bool = False) -> DataFrame:
-    """Last tick (and median gas) per time bucket for ONE pool
-    (reference pool_helpers.py:153-201). Caller pre-filters chain+address."""
-    return _tick_buckets(tick_clock(swaps), start_time, every, gas)
-
-
 def clock_series(
     blocks: DataFrame, ticks: DataFrame, start_time, every: str = "6h", gas: bool = False
 ) -> DataFrame:
@@ -112,7 +100,7 @@ def price_series(
     every: str = "6h",
     gas: bool = False,
 ) -> DataFrame:
-    """bn_series ⟕asof tick_series on the bucket timestamp
+    """Block buckets ⟕asof tick buckets on the bucket timestamp
     (reference pool_helpers.py:202-204): ``clock_series`` over the two
     clocks of these swaps. Output columns:
     (block_timestamp, block_number, tick[, gas_price, gas_used])."""
@@ -174,7 +162,7 @@ def tick_twap(
     1.0001^avg_tick — the geometric-mean price, exactly what the
     on-chain observations oracle accumulates (tickCumulative deltas).
 
-    Caller pre-filters chain+address (same contract as tick_series).
+    Caller pre-filters chain+address (same contract as tick_clock).
     Integration is integer micros x integer tick — exact — with one
     float division and one pow at the end. Returns a 1-row frame
     (avg_tick, twap_price, total_duration_us, n_swaps); empty/singleton
@@ -182,16 +170,12 @@ def tick_twap(
     """
     from ..ops import time_weighted_avg
 
-    df = (
-        swaps.filter(
-            (F.col("block_timestamp") >= F.lit(start_time))
-            & (F.col("block_timestamp") < F.lit(end_time))
-        )
-        .select("block_timestamp", "tick", *_TIEBREAK)
-        .withColumn("tick", F.col("tick").cast("long"))
+    # one event per timestamp, the last swap (tick_clock); the window is on
+    # the dedup key, so cutting after the dedup keeps the same rows
+    df = tick_clock(swaps).filter(
+        (F.col("block_timestamp") >= F.lit(start_time))
+        & (F.col("block_timestamp") < F.lit(end_time))
     )
-    # one event per timestamp: last swap wins (same pin as tick_series)
-    df = dedup_last(df, keys=["block_timestamp"], order=_TIEBREAK)
     twa = time_weighted_avg(
         df.withColumn("__one", F.lit(1)),
         "block_timestamp",
