@@ -210,7 +210,7 @@ def _load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # plan's outputOrdering, so a sort-merge join on the key runs
             # with ZERO query-time SortExecs — the in-memory analog of a
             # bucketed+sorted-at-rest layout. Measured on the sf1
-            # theta_join (examples/theta_join_variants.py): 2.84 s
+            # theta_join (8cd90d6:examples/theta_join_variants.py): 2.84 s
             # unsorted -> 0.85 s sorted (DuckDB 0.72 s), the r8 "engine
             # constant" was two 60 M/15 M-row sorts paid on every run.
             # The sort itself is one-time cache-build cost.
@@ -2474,7 +2474,8 @@ def q_stream_ivf_assign(spark, sf):
     from the compacted segment — so the oracle hash also re-proves
     probe-identity across compaction every round. Crash/resume/replay
     and files_before/after behavior is pinned in tests/test_streaming.py;
-    the N-trigger small-files curve is examples/ivf_compaction_files.py."""
+    the N-trigger small-files curve was measured by
+    8cd90d6:examples/ivf_compaction_files.py."""
     import atexit
     import shutil
     import tempfile

@@ -17,7 +17,7 @@ job, in both execution modes:
 
 Every stage is an operator this repo ships separately (see
 examples/datapipe_quickstart.py, streaming_corpus_dedup.py,
-tokenizer_quickstart.py, streaming_pack_throughput.py);
+tokenizer_quickstart.py, and ``streaming.streaming_token_shards``);
 tests/test_e2e_pipeline.py pins that this composition's output equals
 those staged operators run one-at-a-time. Reference analog: the
 segmented ingest loop (data_update.py:191-292) feeding the tokenize/

@@ -5,10 +5,10 @@ computes. This closes the render step without matplotlib: frames are
 rasterized with numpy and encoded by the pure GIF89a writer in
 datapipe/gif.py.
 
-Pipeline: liquidity_timeline (ONE Spark plan for every frame — no
-per-frame re-scan) -> per-frame bar raster (tick on x, liquidity on y,
-99th-percentile clip like the notebook's quantile normalization) ->
-animated GIF.
+Pipeline: liquidity_timeline over the pool's mint/burns (ONE Spark plan
+for every frame — no per-frame re-scan) -> per-frame bar raster (tick on
+x, liquidity on y, 99th-percentile clip like the notebook's quantile
+normalization) -> animated GIF.
 
 Usage: python examples/liquidity_gif.py [out=/tmp/liquidity_timeline.gif]
 """
@@ -29,6 +29,9 @@ from v3_polars_spark.session import (  # noqa: E402
     quiet_expected_jvm_warnings,
 )
 
+DATA = "/root/reference/v3/data/examples"
+POOL = "0x1d42064FC4Beb5F8aAF85F4617AE8b3b5B8Bd801"  # UNI/WETH 30 bps
+FRAMES = [12372000.0, 12374000.0, 12376626.0]  # as_of of each frame
 W, H = 320, 180
 PALETTE = np.array(
     [
@@ -73,16 +76,17 @@ def main() -> None:
     spark = get_spark(app_name="liquidity-gif")
     quiet_expected_jvm_warnings(spark)
 
-    import __spark_entry__ as em
+    from v3_polars_spark.v3 import Pool, liquidity_timeline
 
+    pool = Pool(spark, POOL, "ethereum", DATA)
     pdf = (
-        em.queries()["liquidity_timeline"](spark, "/root/testdata/sf0.001")
+        liquidity_timeline(pool.mb, FRAMES)
         .toPandas()
         .sort_values(["frame_as_of", "tick"])
     )
     frames = []
     for as_of, g in pdf.groupby("frame_as_of", sort=True):
-        liq = np.maximum(g["liquidity_1e12"].to_numpy(dtype=np.float64), 0.0)
+        liq = np.maximum(g["liquidity"].to_numpy(dtype=np.float64), 0.0)
         frames.append((as_of, g["tick"].to_numpy(dtype=np.int64), liq))
     ticks = np.concatenate([f[1] for f in frames])
 

@@ -22,6 +22,7 @@ from v3_polars_spark.v3 import Pool
 POOL = "0x1d42064FC4Beb5F8aAF85F4617AE8b3b5B8Bd801"  # UNI/WETH 30 bps
 DATA = sys.argv[1] if len(sys.argv) > 1 else "/root/reference/v3/data/examples"
 AS_OF = 12376626  # block after the golden history's last block
+SERIES_START = datetime.datetime(2021, 5, 4)  # first bucket of the price series
 
 
 def main() -> None:
@@ -54,7 +55,7 @@ def main() -> None:
     ladder.select("quote_id", "branch", "sufficient", "amt_out").show()
 
     # 5. resampled price series with as-of backfill (getPriceSeries)
-    series = pool.get_price_series(datetime.datetime(2021, 5, 4), "6h")
+    series = pool.get_price_series(SERIES_START, "6h")
     series.show(5)
 
     # 6. LLM-data ops on any text corpus (here: synthetic docs if present)

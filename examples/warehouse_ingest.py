@@ -24,6 +24,8 @@ from v3_polars_spark.sources.pyds import SegmentSinkDataSource, WarehouseDataSou
 from v3_polars_spark.streaming.state_store import drain_available_now
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/reference/v3/data/examples"
+POOL = "0x1d42064FC4Beb5F8aAF85F4617AE8b3b5B8Bd801"  # UNI/WETH 30 bps
+AS_OF = 12376626  # block after the golden history's last block
 TABLES = ["pool_swap_events", "pool_mint_burn_events", "pool_initialize_events", "factory_pool_created"]
 
 
@@ -56,10 +58,8 @@ def main() -> None:
         # domain layer on it directly
         from v3_polars_spark.v3 import Pool
 
-        pool = Pool(
-            spark, "0x1d42064FC4Beb5F8aAF85F4617AE8b3b5B8Bd801", "ethereum", landed
-        )
-        liq = pool.create_liq(12376626)
+        pool = Pool(spark, POOL, "ethereum", landed)
+        liq = pool.create_liq(AS_OF)
         print(f"liquidity distribution on landed data: {liq.count()} ticks")
 
 

@@ -176,3 +176,134 @@ def test_sync_resumes_on_file_uri(spark, tmp_path):
     rows = {t: T.read_table(spark, landed, t).count() for t in T.TABLES}
     assert update_tables(spark, conn, landed, gp.CHAIN) == dict.fromkeys(T.TABLES, 0)
     assert {t: T.read_table(spark, landed, t).count() for t in T.TABLES} == rows
+
+
+SWAPS = "pool_swap_events"
+
+
+def _chain_rows(spark, data_path):
+    """{chain_name: (row count, sha256 of the sorted rows)} of the landed
+    swap table."""
+    import hashlib
+
+    rows = T.read_table(spark, data_path, SWAPS).collect()
+    out = {}
+    for chain in {r["chain_name"] for r in rows}:
+        mine = sorted(tuple(r) for r in rows if r["chain_name"] == chain)
+        out[chain] = (len(mine), hashlib.sha256(repr(mine).encode()).hexdigest())
+    return out
+
+
+@pytest.fixture(params=["plain", "file_uri"])
+def two_chains(request, spark, tmp_path):
+    """A generated pool's swaps landed under ``ethereum`` in several small
+    segments, plus a one-segment copy under ``polygon``; the data path is
+    plain or a ``file://`` URI."""
+    from test_v3_kernels import _gen_pool
+
+    gp = _gen_pool()
+    src = str(tmp_path / "src")
+    gp.pool_dataset(5, src, n_pools=1, n_swaps=60, n_mb=10, span_blocks=1_000, n_syncs=1)
+    data = str(tmp_path / "landed")
+    if request.param == "file_uri":
+        data = "file://" + data
+    conn = LocalParquetConnector(spark, src)
+    assert update_table(spark, conn, data, SWAPS, gp.CHAIN, tgt_max_rows=25) > 1
+    other = T.read_table(spark, src, SWAPS).withColumn("chain_name", F.lit("polygon"))
+    T.write_segment(other, data, SWAPS)
+    return data
+
+
+def test_drop_chain_removes_only_that_chain(spark, two_chains):
+    before = _chain_rows(spark, two_chains)
+    assert set(before) == {"ethereum", "polygon"}
+    T.drop_chain(spark, two_chains, SWAPS, "ethereum")
+    assert _chain_rows(spark, two_chains) == {"polygon": before["polygon"]}
+
+
+def test_compact_segments_generated(spark, two_chains):
+    """The generated twin of test_compact_segments: every chain's small
+    segments compact to one file, with the same rows."""
+    before = _chain_rows(spark, two_chains)
+    stats = T.compact_segments(spark, two_chains, SWAPS, target_rows_per_file=10_000)
+    assert stats["ethereum"][0] > 1 and stats == {
+        "ethereum": (stats["ethereum"][0], 1), "polygon": (1, 1)
+    }
+    assert _chain_rows(spark, two_chains) == before
+
+
+@pytest.mark.parametrize("crash_at", [0, 1])
+def test_compact_crash_between_renames(spark, two_chains, monkeypatch, crash_at):
+    """A rename that raises once, at either of the swap's two renames,
+    never shows a row under another chain_name, and the next call serves
+    the chain's rows exactly once under its own name."""
+    from v3_polars_spark import fsutil
+
+    before = _chain_rows(spark, two_chains)
+    real_rename = fsutil.rename
+    calls = []
+
+    def crashing_rename(spark_, src, dst):
+        calls.append(src)
+        if len(calls) == crash_at + 1:
+            raise IOError("injected crash")
+        real_rename(spark_, src, dst)
+
+    monkeypatch.setattr(fsutil, "rename", crashing_rename)
+    with pytest.raises(IOError, match="injected crash"):
+        T.compact_segments(spark, two_chains, SWAPS, target_rows_per_file=10_000)
+    during = _chain_rows(spark, two_chains)
+    assert set(during) <= set(before)  # no rows under another chain_name
+    assert all(during[c] == before[c] for c in during)
+    monkeypatch.undo()
+    T.compact_segments(spark, two_chains, SWAPS, target_rows_per_file=10_000)
+    assert _chain_rows(spark, two_chains) == before
+
+
+def test_ovm1_probe_read_error_raises(spark, tmp_path, monkeypatch):
+    """The OVM1 replay's already-run probe raises on a read error instead
+    of taking it for "not run" and appending the legacy rows again."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from test_v3_kernels import _gen_pool
+
+    gp = _gen_pool()
+    gen = str(tmp_path / "gen")
+    ds = gp.pool_dataset(6, gen, n_pools=1, n_swaps=30, n_mb=10, span_blocks=1_000, n_syncs=1)
+    rows = T.read_table(spark, gen, SWAPS)
+    src = str(tmp_path / "src")
+    (
+        rows.withColumn("chain_name", F.lit("optimism"))
+        .unionByName(rows.withColumn("chain_name", F.lit("optimism_legacy_ovm1")))
+        .write.parquet(os.path.join(src, SWAPS))
+    )
+    conn = LocalParquetConnector(spark, src)
+    mapping = spark.createDataFrame(
+        [(ds.pools[0].address, "0xnew")], "oldaddress string, newaddress string"
+    )
+    landed = str(tmp_path / "landed")
+
+    def sync():
+        return update_tables(
+            spark, conn, landed, "optimism", tables=[SWAPS], ovm1_mapping=mapping
+        )[SWAPS]
+
+    assert sync() == 2  # the live segment and the legacy replay
+    assert sync() == 0
+    n_rows = T.read_table(spark, landed, SWAPS).count()
+
+    real_parquet = DataFrameReader.parquet
+    reads = []
+
+    def failing_parquet(self, *paths, **options):
+        if str(paths[0]).startswith(landed):
+            reads.append(paths[0])
+            if len(reads) == 2:  # the first is the sync's resume probe
+                raise IOError("injected read error")
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_parquet)
+    with pytest.raises(IOError, match="injected read error"):
+        sync()
+    monkeypatch.undo()
+    assert T.read_table(spark, landed, SWAPS).count() == n_rows

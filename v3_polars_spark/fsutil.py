@@ -30,17 +30,41 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(jpath))
 
 
-def list_file_names(spark: SparkSession, path: str) -> list[str]:
-    """Names of the direct FILE children of ``path`` (directories are
-    skipped); empty list when the path does not exist."""
+def _child_names(spark: SparkSession, path: str, files: bool) -> list[str]:
     fs, jpath = _fs_and_path(spark, path)
     if not fs.exists(jpath):
         return []
     return [
         st.getPath().getName()
         for st in fs.listStatus(jpath)
-        if st.isFile()
+        if st.isFile() == files
     ]
+
+
+def list_file_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the direct FILE children of ``path`` (directories are
+    skipped); empty list when the path does not exist."""
+    return _child_names(spark, path, files=True)
+
+
+def list_dir_names(spark: SparkSession, path: str) -> list[str]:
+    """Names of the direct DIRECTORY children of ``path``; empty list when
+    the path does not exist."""
+    return _child_names(spark, path, files=False)
+
+
+def rename(spark: SparkSession, src: str, dst: str) -> None:
+    """Rename ``src`` to ``dst``; raises where Hadoop's rename reports
+    failure by returning False."""
+    fs, jsrc = _fs_and_path(spark, src)
+    if not fs.rename(jsrc, spark._jvm.org.apache.hadoop.fs.Path(dst)):
+        raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def delete(spark: SparkSession, path: str) -> None:
+    """Recursive delete; a no-op when ``path`` does not exist."""
+    fs, jpath = _fs_and_path(spark, path)
+    fs.delete(jpath, True)
 
 
 def dir_fingerprint(spark: SparkSession, path: str) -> str:
@@ -92,16 +116,6 @@ def read_text(spark: SparkSession, path: str) -> str | None:
                 break
             out.append(b)
         return out.decode("utf-8")
-    finally:
-        stream.close()
-
-
-def write_text(spark: SparkSession, path: str, text: str) -> None:
-    """Small-file text write (overwrite), parent dirs auto-created."""
-    fs, jpath = _fs_and_path(spark, path)
-    stream = fs.create(jpath, True)
-    try:
-        stream.write(bytearray(text.encode("utf-8")))
     finally:
         stream.close()
 

@@ -28,23 +28,32 @@ OVM1_CHAIN = "optimism_legacy_ovm1"
 OVM1_GENESIS_TS = "2021-11-11 21:16:39"
 
 
+def _read_landed(spark: SparkSession, data_path: str, table: str) -> DataFrame | None:
+    """The landed table as one directory read, None when nothing has
+    landed: the path is absent, or holds no parquet file yet. The path
+    resolves through the Hadoop FS API (fsutil), so a ``file://``,
+    ``hdfs://`` or ``s3a://`` data_path reads like a local one; any other
+    read error raises, so no caller mistakes it for an empty table."""
+    path = os.path.join(data_path, table)
+    if not fsutil.exists(spark, path):
+        return None
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":
+            raise
+        return None
+
+
 def max_landed_block(
     spark: SparkSession, data_path: str, table: str, chain: str
 ) -> int | None:
     """Resume point: max block_number already landed for this chain
     (reference data_update.py:162-189), None when nothing has landed.
-    The path resolves through the Hadoop FS API (fsutil), so a
-    ``file://``, ``hdfs://`` or ``s3a://`` data_path resumes like a local
-    one; any read error but an empty table directory raises, instead of
-    restarting the sync at the first block and landing every row again."""
-    path = os.path.join(data_path, table)
-    if not fsutil.exists(spark, path):
-        return None
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        if e.getCondition() != "UNABLE_TO_INFER_SCHEMA":  # no parquet file yet
-            raise
+    A read error raises (``_read_landed``) instead of restarting the sync
+    at the first block and landing every row again."""
+    df = _read_landed(spark, data_path, table)
+    if df is None:
         return None
     row = (
         df.filter(F.col("chain_name") == chain)
@@ -147,16 +156,12 @@ def update_tables(
             # idempotence: rewritten legacy rows all land at the synthetic
             # block_number=1, which never occurs for live optimism data —
             # if any such rows are already on disk, the replay has run
-            # (re-appending would double every legacy pool's liquidity)
-            try:
-                landed = T.read_table(spark, data_path, table)
-                already = not landed.filter(
-                    (F.col("chain_name") == "optimism")
-                    & (F.col("block_number") == 1)
-                ).isEmpty()
-            except Exception:
-                already = False
-            if already:
+            # (re-appending would double every legacy pool's liquidity, so
+            # a read error raises rather than reading as "not run")
+            landed = _read_landed(spark, data_path, table)
+            if landed is not None and not landed.filter(
+                (F.col("chain_name") == "optimism") & (F.col("block_number") == 1)
+            ).isEmpty():
                 continue
             lo, hi = connector.min_max_block(OVM1_CHAIN, table)
             if lo is None:

@@ -140,7 +140,8 @@ def retrain_ivf_index(
     processed was carried into the new root by the re-assignment.
     Recall recovery is pinned end-to-end (drift → retrain → swap →
     resumed drain → recall@10 back above the SLO) in
-    tests/test_streaming.py and examples/ivf_retrain_recall.py."""
+    tests/test_streaming.py; the sf1 recall run was
+    8cd90d6:examples/ivf_retrain_recall.py."""
     _, assigned = read_ivf_index(spark, old_root)
     id_col = assigned.columns[0]
     corpus = assigned.select(

@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from . import fsutil
+
 TABLES = [
     "factory_pool_created",
     "pool_initialize_events",
@@ -199,12 +201,10 @@ def drop_chain(spark: SparkSession, data_path: str, table: str, chain: str) -> N
     """S6 'drop tables for a chain'. With the chain-partitioned layout this
     is a partition-directory delete — structurally fixing the reference's
     footgun of deleting co-located other-chain rows
-    (reference v3/helpers/pool_helpers.py:218-231, SURVEY.md §8.1 Q6)."""
-    import shutil
-
-    part_dir = os.path.join(data_path, table, f"chain_name={chain}")
-    if os.path.isdir(part_dir):
-        shutil.rmtree(part_dir)
+    (reference v3/helpers/pool_helpers.py:218-231, SURVEY.md §8.1 Q6).
+    The path resolves through the Hadoop FS API (fsutil), so a
+    ``file://``, ``hdfs://`` or ``s3a://`` data_path drops like a local one."""
+    fsutil.delete(spark, os.path.join(data_path, table, f"chain_name={chain}"))
 
 
 def write_bucketed(
@@ -243,32 +243,51 @@ def compact_segments(
 
     Small files are the classic long-lived-ingest pathology — every scan
     pays per-file open/footer costs and planning overhead grows with the
-    manifest. Compaction is per chain partition (write new files →
-    atomically swap the partition directory), ordered by the event total
+    manifest. Compaction is per chain partition, ordered by the event total
     order so parquet row-group min/max stats keep block-range pruning
     effective after the rewrite.
 
-    Not transactional across partitions: a concurrent reader sees each
-    chain partition either fully old or fully new (POSIX rename), never a
-    mix within one chain. Returns {chain: (files_before, files_after)}.
+    The swap is two renames: the old partition moves aside to the hidden
+    ``.chain_name=<c>.old``, then the new files move in under
+    ``chain_name=<c>``. Hidden names are skipped by Spark's partition
+    discovery, so a reader never sees a chain's rows twice or under
+    another name; between the two renames it sees none of that chain's
+    rows. A crash there leaves the chain hidden until the next call, which
+    first restores every ``.old`` partition that has no replacement and
+    deletes the rest, with any leftover ``.compact-*`` staging directory.
+    Paths resolve through the Hadoop FS API (fsutil), so ``file://``,
+    ``hdfs://`` and ``s3a://`` data paths work. Returns
+    {chain: (files_before, files_after)}.
     """
     import math
-    import os
-    import shutil
     import uuid
 
     base = os.path.join(data_path, table)
+    for entry in fsutil.list_dir_names(spark, base):
+        hidden = os.path.join(base, entry)
+        if entry.startswith(".compact-"):
+            fsutil.delete(spark, hidden)
+        elif entry.startswith(".chain_name=") and entry.endswith(".old"):
+            part_dir = os.path.join(base, entry[1 : -len(".old")])
+            if fsutil.exists(spark, part_dir):
+                fsutil.delete(spark, hidden)
+            else:
+                fsutil.rename(spark, hidden, part_dir)
     order = [
         c
         for c in ("block_number", "transaction_index", "log_index")
         if c in {f.name for f in SCHEMAS[table].fields}
     ]
+
+    def n_parquet(path: str) -> int:
+        return sum(f.endswith(".parquet") for f in fsutil.list_file_names(spark, path))
+
     out: dict = {}
-    for entry in sorted(os.listdir(base)):
-        part_dir = os.path.join(base, entry)
-        if not (entry.startswith("chain_name=") and os.path.isdir(part_dir)):
+    for entry in sorted(fsutil.list_dir_names(spark, base)):
+        if not entry.startswith("chain_name="):
             continue
-        files_before = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
+        part_dir = os.path.join(base, entry)
+        files_before = n_parquet(part_dir)
         df = spark.read.parquet(part_dir)
         n = df.count()
         n_files = max(1, math.ceil(n / target_rows_per_file))
@@ -279,12 +298,11 @@ def compact_segments(
             .write.mode("overwrite")
             .parquet(tmp_dir)
         )
-        old_dir = part_dir + ".old"
-        os.rename(part_dir, old_dir)
-        os.rename(tmp_dir, part_dir)
-        shutil.rmtree(old_dir)
-        files_after = [f for f in os.listdir(part_dir) if f.endswith(".parquet")]
-        out[entry.split("=", 1)[1]] = (len(files_before), len(files_after))
+        old_dir = os.path.join(base, f".{entry}.old")
+        fsutil.rename(spark, part_dir, old_dir)
+        fsutil.rename(spark, tmp_dir, part_dir)
+        fsutil.delete(spark, old_dir)
+        out[entry.split("=", 1)[1]] = (files_before, n_parquet(part_dir))
     return out
 
 
